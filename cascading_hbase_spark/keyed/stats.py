@@ -157,8 +157,8 @@ def _footer_min_max(
     trustworthy stats; callers fall back to the aggregate for the
     rest.  Bails to {} (full fallback) when the layout is legacy, a
     TTL is set (expired rows are invisible to the scan but present in
-    the footers), the path is a scheme URI, or anything about the
-    footers is unreadable."""
+    the footers), the path is a scheme URI, a listed generation holds
+    no parquet file, or anything about the footers is unreadable."""
     import os as _os
 
     if _os.environ.get("SPARK_GRAFT_FOOTER_STATS", "1") == "0":
@@ -185,7 +185,13 @@ def _footer_min_max(
             gdir = _os.path.join(
                 path, f"{BUCKET_COL}={b}", f"{GEN_PREFIX}{g}"
             )
-            for f in sorted(_glob.glob(_os.path.join(gdir, "*.parquet"))):
+            files = sorted(_glob.glob(_os.path.join(gdir, "*.parquet")))
+            if not files:
+                # a generation the manifest lists but whose files are
+                # gone (concurrent vacuum, damaged table): the other
+                # buckets' footers are not the table's min/max
+                return {}
+            for f in files:
                 md = pq.ParquetFile(f).metadata
                 for rg_i in range(md.num_row_groups):
                     rg = md.row_group(rg_i)

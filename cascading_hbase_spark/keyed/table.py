@@ -74,7 +74,7 @@ import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from cascading_hbase_spark.keyed.controlplane import (
     ConcurrentWriteError,
@@ -982,8 +982,7 @@ def write_keyed(
                 f"zone_cols are fixed at table creation "
                 f"(table: {meta.get('zone_cols', [])}, got: {list(zone_cols)})"
             )
-        # legacy manifests predate the stored schema; backfill from the batch
-        meta.setdefault("schema", df.schema.json())
+        _backfill_schema(spark, path, meta, df)
         # Additive schema evolution (HBase cells are schema-less per
         # qualifier — a new column in an APPEND batch is a new qualifier,
         # HBaseScheme.java value-field mapping): extend the manifest
@@ -1001,7 +1000,6 @@ def write_keyed(
             meta["schema"] = StructType(
                 list(declared.fields) + new_fields
             ).json()
-            meta["schema_evolved"] = True
             fam = meta.get("families", {})
             for f in new_fields:
                 fam.setdefault(f.name, "cf")
@@ -1039,12 +1037,13 @@ def write_keyed(
         affected = sorted(
             r[0] for r in batch.select(BUCKET_COL).distinct().collect()
         )
-        current = _read_raw(spark, path, meta).filter(F.col(BUCKET_COL).isin(affected))
+        current = _read_raw(spark, path, meta, buckets=set(affected))
         merged = _lww(
             current.unionByName(batch, allowMissingColumns=True),
             key,
             _order_cols(df.columns, key, seq_col),
         )
+        _record_written_types(meta, merged)
         # Merged only now — NOT into the early seq-bump save above — so
         # a crash between the two cannot advance application cursors
         # without their data.
@@ -1055,6 +1054,39 @@ def write_keyed(
 # ---------------------------------------------------------------------------
 # Read path
 # ---------------------------------------------------------------------------
+
+def _backfill_schema(
+    spark: SparkSession, path: str, meta: dict, batch: DataFrame
+) -> None:
+    """Legacy manifests predate the stored schema, which every read now
+    plans from: recover it from the live files (the inferring read),
+    or from the batch when the table holds no data yet."""
+    if "schema" in meta:
+        return
+    if meta.get("gens"):
+        live = _read_raw(spark, path, meta).drop(SEQ_COL, BUCKET_COL)
+        meta["schema"] = live.schema.json()
+    else:
+        meta["schema"] = batch.schema.json()
+
+
+def _record_written_types(meta: dict, merged: DataFrame) -> None:
+    """A batch column wider than the table's (bigint into an int
+    column, say) is written at the type the merge's union coerced it
+    to.  Record that type in the manifest, so reads plan with it and
+    widen the older generations' files instead of failing on them."""
+    declared = StructType.fromJson(json.loads(meta["schema"]))
+    written = {f.name: f.dataType for f in merged.schema.fields}
+    fields = [
+        StructField(f.name, written[f.name], f.nullable, f.metadata)
+        if f.name in written
+        and written[f.name].simpleString() != f.dataType.simpleString()
+        else f
+        for f in declared.fields
+    ]
+    if fields != declared.fields:
+        meta["schema"] = StructType(fields).json()
+
 
 def _read_raw(
     spark: SparkSession,
@@ -1069,7 +1101,15 @@ def _read_raw(
     arbitrary bucket-set) pruning happens HERE, driver-side, before any
     file listing — the analogue of the reference pruning regions before
     creating splits (TableInputFormatWrap.java:55-65).  Includes
-    SEQ/BUCKET columns."""
+    SEQ/BUCKET columns.
+
+    The read is planned from the manifest: its stored schema (plus
+    SEQ/BUCKET/GEN) is handed to the reader, so only the kept
+    generation dirs are listed and no footer-inference job runs.  The
+    same schema carries additive evolution: a generation written
+    before a column existed reads it as typed nulls, in manifest
+    order.  Only a legacy flat layout or a legacy-migrated manifest
+    without a stored schema still infers from the files."""
     gens = meta.get("gens")
     if gens is None:  # legacy layout (flat bucket dirs)
         return spark.read.parquet(path)
@@ -1080,8 +1120,8 @@ def _read_raw(
         and (max_bucket is None or int(b) <= max_bucket)
         and (buckets is None or int(b) in buckets)
     }
+    schema_json = meta.get("schema")
     if not keep:
-        schema_json = meta.get("schema")
         if schema_json is None and gens:
             # legacy-migrated manifest without a stored schema: recover
             # it from any live generation (zero rows read)
@@ -1097,8 +1137,6 @@ def _read_raw(
             raise FileNotFoundError(
                 f"keyed table {path} is empty and its manifest stores no schema"
             )
-        from pyspark.sql.types import StructType
-
         schema = StructType.fromJson(json.loads(schema_json))
         empty = spark.createDataFrame([], schema)
         return empty.withColumn(SEQ_COL, F.lit(0)).withColumn(
@@ -1109,26 +1147,16 @@ def _read_raw(
         for b, g in sorted(keep.items())
     ]
     reader = spark.read.option("basePath", path)
-    if meta.get("schema_evolved"):
-        # Post-evolution: bucket generations written before the newest
-        # column(s) lack them; merge file schemas, then conform below.
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*paths).drop(GEN_COL)
-    schema_json = meta.get("schema")
-    if meta.get("schema_evolved") and schema_json is not None:
-        from pyspark.sql.types import StructType
-
-        declared = StructType.fromJson(json.loads(schema_json))
-        # A pruned read may touch only pre-evolution buckets — add the
-        # missing columns as typed nulls so every read sees the full
-        # manifest schema in manifest order.
-        cols = [
-            F.col(f.name) if f.name in df.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in declared.fields
-        ]
-        df = df.select(*cols, SEQ_COL, BUCKET_COL)
-    return df
+    if schema_json is not None:
+        # SEQ is long: the writers stamp ``F.lit(seq)``, int32 on disk
+        # until the counter passes 2^31-1, and the reader widens int32
+        reader = reader.schema(
+            StructType.fromJson(json.loads(schema_json))
+            .add(SEQ_COL, LongType())
+            .add(BUCKET_COL, IntegerType())
+            .add(GEN_COL, IntegerType())
+        )
+    return reader.parquet(*paths).drop(GEN_COL)
 
 
 def _meta_at(path: str, generation: int | None) -> dict:
@@ -1213,7 +1241,11 @@ def read_keyed(
 
     A key range prunes twice: bucket directories via the partition
     column (split pruning, TableInputFormatWrap.java:55-65) and row
-    groups via the pushed key predicate on sorted files.
+    groups via the pushed key predicate on sorted files.  The scan is
+    planned from the manifest: no listing beyond the kept generation
+    dirs and no footer-inference job; the schema is the manifest's,
+    and columns added by a later schema evolution read as typed nulls
+    from generations written before them.
 
     ``zone_filter=(col, lo, hi)`` (either bound may be None) prunes
     bucket directories by the manifest's per-bucket zone maps for a
@@ -1298,7 +1330,10 @@ def get_keyed(
     driver-side (boundaries live in the manifest), ONLY those buckets'
     live generation dirs are listed, and the IN-list predicate pushes
     into the sorted parquet scan (row-group min/max skipping).  A
-    1000-bucket table asked for 3 keys reads at most 3 buckets."""
+    1000-bucket table asked for 3 keys reads at most 3 buckets.  The
+    schema comes from the manifest (no footer-inference job: collecting
+    the result runs one Spark job), with evolved columns read as typed
+    nulls."""
     if not keys:
         raise ValueError("get_keyed requires at least one key")
     meta = _meta_at(path, generation)
@@ -1335,7 +1370,7 @@ def delete_keyed(spark: SparkSession, path: str, keys: DataFrame) -> None:
             .distinct()
             .collect()
         )
-        current = _read_raw(spark, path, meta).filter(F.col(BUCKET_COL).isin(affected))
+        current = _read_raw(spark, path, meta, buckets=set(affected))
         # Legacy-migrated manifests lack the stored schema; backfill it
         # from the live snapshot so a delete that empties the whole
         # table still leaves it readable (empty frame, right schema).
@@ -1416,7 +1451,7 @@ def merge_keyed(
         del_keys = changes.filter(is_del).select(key)
 
         # additive schema evolution, same contract as write_keyed APPEND
-        meta.setdefault("schema", upserts.schema.json())
+        _backfill_schema(spark, path, meta, upserts)
         declared = StructType.fromJson(json.loads(meta["schema"]))
         known = {f.name for f in declared.fields}
         new_fields = [
@@ -1425,7 +1460,6 @@ def merge_keyed(
         ]
         if new_fields:
             meta["schema"] = StructType(list(declared.fields) + new_fields).json()
-            meta["schema_evolved"] = True
             fam = meta.get("families", {})
             for f in new_fields:
                 fam.setdefault(f.name, "cf")
@@ -1455,13 +1489,14 @@ def merge_keyed(
                 ).distinct().collect()
             }
         )
-        current = _read_raw(spark, path, meta).filter(F.col(BUCKET_COL).isin(affected))
+        current = _read_raw(spark, path, meta, buckets=set(affected))
         after_delete = current.join(del_keys, key, "left_anti")
         merged = _lww(
             after_delete.unionByName(batch, allowMissingColumns=True),
             key,
             _order_cols(upserts.columns, key, seq_col),
         )
+        _record_written_types(meta, merged)
         # application metadata (e.g. a replica's sync cursor) commits in
         # the same atomic manifest flip as the applied changes
         _merge_meta_extra(meta, meta_extra)
@@ -1540,14 +1575,10 @@ def compact_keyed(
                     fragmented.append(int(b))
             if not fragmented:
                 return
-            current = _read_raw(spark, path, meta).filter(
-                F.col(BUCKET_COL).isin(fragmented)
-            )
+            current = _read_raw(spark, path, meta, buckets=set(fragmented))
             if meta.get("ttl"):
                 # purge TTL'd rows from the buckets being rewritten
                 current = _ttl_filter(current, meta["ttl"])
-            # schema_evolved stays: untouched buckets may still predate
-            # the evolution and need the mergeSchema read path.
             _stage_and_publish(
                 current, path, key, meta, sorted(fragmented), by_bucket=True
             )
@@ -1556,10 +1587,6 @@ def compact_keyed(
         if meta.get("ttl"):
             # compaction is where TTL'd rows are physically purged
             current = _ttl_filter(current, meta["ttl"])
-        # The rewrite lands every live bucket on the full manifest
-        # schema, so the mergeSchema read path is no longer needed
-        # (historical snapshots keep their own flag for time travel).
-        meta.pop("schema_evolved", None)
         if n_buckets is not None:
             meta["boundaries"] = _sample_boundaries(current, key, n_buckets)
             # Content-preservation hint for CDC pruning: this commit

@@ -912,10 +912,11 @@ def _release_pin(df: DataFrame) -> None:
 # Pins evicted by a cross-key build are NOT released immediately: a
 # thread may have fetched the old pin and still be mid-query on it
 # (the latch in _pinned only serializes same-key builds — ADVICE r13).
-# Eviction parks the old DataFrame here and the NEXT eviction frees it,
-# giving in-flight consumers a full build+consume generation to drain.
-# Bounded: at most one generation (2 relations) parked per cache.
-_PENDING_RELEASE: list[DataFrame] = []
+# Eviction parks the old DataFrame here, under its cache's id, and the
+# NEXT eviction from the SAME cache frees it, giving in-flight
+# consumers a full build+consume generation to drain.  Bounded: at most
+# one parked relation per cache.
+_PENDING_RELEASE: dict[int, list[DataFrame]] = {}
 
 
 def clear_edge_caches() -> None:
@@ -930,8 +931,9 @@ def clear_edge_caches() -> None:
         for cache in (_EDGE_CACHE, _CAPPED_EDGE_CACHE):
             for key in list(cache):
                 _release_pin(cache.pop(key))
-        for df in _PENDING_RELEASE:
-            _release_pin(df)
+        for parked in _PENDING_RELEASE.values():
+            for df in parked:
+                _release_pin(df)
         _PENDING_RELEASE.clear()
 
 
@@ -1004,11 +1006,10 @@ def _pinned(
                 # before this build finished can still finish its query
                 # (checkpoint blocks are not recomputable, so an eager
                 # release would fail it hard mid-flight).
-                for df in _PENDING_RELEASE:
+                parked = _PENDING_RELEASE.setdefault(id(cache), [])
+                for df in parked:
                     _release_pin(df)
-                _PENDING_RELEASE.clear()
-                for old_key in list(cache):
-                    _PENDING_RELEASE.append(cache.pop(old_key))
+                parked[:] = [cache.pop(old_key) for old_key in list(cache)]
                 cache[key] = fresh
                 return cache[key]
         finally:

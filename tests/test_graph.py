@@ -227,6 +227,37 @@ def test_pinned_cache_lifecycle(spark):
     assert _n_pinned_rdds(spark) == base
 
 
+def test_pinned_cache_eviction_spares_other_cache_parked_pin(spark):
+    """Each cache parks its own evicted pin: an eviction in the capped
+    edge cache must not release the base edge cache's parked pin (and
+    the reverse) — each keeps its one-generation grace."""
+    from cascading_hbase_spark.queries.joins import (
+        _CAPPED_EDGE_CACHE,
+        _EDGE_CACHE,
+        _pinned,
+        clear_edge_caches,
+    )
+
+    clear_edge_caches()
+    base = _n_pinned_rdds(spark)
+    a = _pinned(_EDGE_CACHE, spark, "dirA", lambda: spark.range(5).toDF("n"))
+    _pinned(_EDGE_CACHE, spark, "dirB", lambda: spark.range(6).toDF("n"))
+    c = _pinned(_CAPPED_EDGE_CACHE, spark, "dirA", lambda: spark.range(3).toDF("n"))
+    _pinned(_CAPPED_EDGE_CACHE, spark, "dirB", lambda: spark.range(4).toDF("n"))
+    # a parked in the base cache, c in the capped one; both readable
+    assert _n_pinned_rdds(spark) == base + 4
+    assert a.count() == 5 and c.count() == 3
+    # a second capped eviction frees c (its own parked pin) only
+    _pinned(_CAPPED_EDGE_CACHE, spark, "dirC", lambda: spark.range(2).toDF("n"))
+    assert _n_pinned_rdds(spark) == base + 4
+    assert a.count() == 5
+    # and a second base eviction frees a, sparing the capped parked pin
+    _pinned(_EDGE_CACHE, spark, "dirC", lambda: spark.range(1).toDF("n"))
+    assert _n_pinned_rdds(spark) == base + 4
+    clear_edge_caches()
+    assert _n_pinned_rdds(spark) == base
+
+
 def test_pinned_cache_survives_failed_build(spark):
     """A request whose build raises (bad sf_dir -> parquet listing
     error) must not evict the healthy previous pin (r06 review

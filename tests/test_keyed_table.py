@@ -2387,3 +2387,169 @@ def test_changefeed_rebucket_prune_respects_ttl_and_missing_history(
     assert sorted((r.key, r._change) for r in feed2.collect()) == [
         (k, "insert") for k in range(5)
     ]
+
+
+# ---------------------------------------------------------------------------
+# Manifest-planned reads: the stored schema is handed to the reader, so
+# a pruned read lists only its generation dirs and runs no footer job.
+# ---------------------------------------------------------------------------
+
+def _jobs_run(spark, action) -> int:
+    """Spark jobs launched by ``action()``, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"kt-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_get_and_bounded_scan_run_one_job(spark, tmp_path):
+    """A 3-key multi-get and a bounded range scan each run exactly one
+    Spark job: the manifest supplies the schema, so no job infers it
+    from the parquet footers."""
+    from cascading_hbase_spark.keyed.table import get_keyed
+
+    path = str(tmp_path / "kt")
+    write_keyed(
+        spark.createDataFrame(
+            [(f"k{i:03d}", i) for i in range(100)], "key string, val int"
+        ),
+        path, "key", n_buckets=4,
+    )
+    assert _jobs_run(spark, lambda: None) == 0
+    got = []
+    n_get = _jobs_run(
+        spark,
+        lambda: got.extend(get_keyed(spark, path, ["k001", "k050", "k099"]).collect()),
+    )
+    assert sorted(r["key"] for r in got) == ["k001", "k050", "k099"]
+    assert n_get == 1
+    scanned = []
+    n_scan = _jobs_run(
+        spark,
+        lambda: scanned.extend(read_keyed(spark, path, start="k010", stop="k020").collect()),
+    )
+    assert len(scanned) == 10
+    assert n_scan == 1
+
+
+def test_pruned_read_of_pre_evolution_buckets_sees_manifest_schema(spark, tmp_path):
+    """After an additive evolution, a get or range read that touches
+    only buckets written before it returns the full manifest column
+    order with the new column as typed nulls; a time-travel read from
+    before the evolution returns the old schema."""
+    from pyspark.sql.types import LongType, StringType
+
+    from cascading_hbase_spark.keyed.table import get_keyed
+
+    path = str(tmp_path / "evolve")
+    write_keyed(
+        spark.createDataFrame(
+            [(f"k{i:03d}", i) for i in range(100)], "key string, val int"
+        ),
+        path, "key", n_buckets=4, retain=10,
+    )                                                              # v1
+    write_keyed(
+        spark.createDataFrame(
+            [("k000", 1000, "x", 7)],
+            "key string, val int, extra string, n bigint",
+        ),
+        path, "key",
+    )                                                              # v2
+    want = ["key", "val", "extra", "n"]
+    for df in (
+        get_keyed(spark, path, ["k060", "k099"]),
+        read_keyed(spark, path, start="k050", stop="k060"),
+    ):
+        assert df.columns == want
+        assert isinstance(df.schema["extra"].dataType, StringType)
+        assert isinstance(df.schema["n"].dataType, LongType)
+        rows = df.collect()
+        assert rows and all(r["extra"] is None and r["n"] is None for r in rows)
+    assert get_keyed(spark, path, ["k000"]).collect()[0]["n"] == 7
+    old = read_keyed(spark, path, generation=1)
+    assert old.columns == ["key", "val"]
+    assert old.count() == 100
+
+
+def test_plain_table_read_schema_unchanged(spark, tmp_path):
+    """For a table that never evolved, reads expose exactly the written
+    columns and types, in order, with the engine's columns dropped."""
+    from cascading_hbase_spark.keyed.table import get_keyed
+
+    path = str(tmp_path / "plain")
+    df = spark.createDataFrame(
+        [(i, f"s{i}", float(i), [i]) for i in range(20)],
+        "k bigint, s string, d double, arr array<int>",
+    )
+    write_keyed(df, path, "k", n_buckets=2)
+    for out in (
+        read_keyed(spark, path),
+        read_keyed(spark, path, start=3, stop=9),
+        get_keyed(spark, path, [4]),
+    ):
+        assert out.columns == df.columns
+        assert out.schema == df.schema
+    assert read_keyed(spark, path, fields=["d"]).columns == ["k", "d"]
+
+
+@localfs_plane_only
+def test_legacy_manifest_schema_backfills_from_live_files(spark, tmp_path):
+    """A legacy-migrated manifest without a stored schema recovers it
+    from the table's files, not from the first batch: a batch that
+    omits a column must not hide that column from later reads."""
+    import json
+
+    path = str(tmp_path / "legacyschema")
+    write_keyed(
+        spark.createDataFrame(
+            [("a", 1, "x"), ("m", 2, "y")], "key string, val int, extra string"
+        ),
+        path, "key", n_buckets=2,
+    )
+    mp = os.path.join(path, "_kt_meta.json")
+    with open(mp) as f:
+        meta = json.load(f)
+    meta.pop("schema")
+    with open(mp, "w") as f:
+        json.dump(meta, f)
+    write_keyed(spark.createDataFrame([("b", 4)], "key string, val int"), path, "key")
+    out = read_keyed(spark, path)
+    assert out.columns == ["key", "val", "extra"]
+    rows = {r["key"]: (r["val"], r["extra"]) for r in out.collect()}
+    assert rows == {"a": (1, "x"), "m": (2, "y"), "b": (4, None)}
+
+
+def test_append_of_wider_type_widens_manifest_schema(spark, tmp_path):
+    """A batch whose column is wider than the table's is written at the
+    wider type; the manifest records it, so reads of buckets the batch
+    never touched widen their older files instead of failing."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.types import LongType
+
+    from cascading_hbase_spark.keyed.table import get_keyed, merge_keyed
+
+    def upsert(path, batch):
+        write_keyed(batch, path, "k")
+
+    def merge(path, batch):
+        merge_keyed(spark, path, batch.withColumn("_change", F.lit("update")))
+
+    for name, write in (("append", upsert), ("merge", merge)):
+        path = str(tmp_path / name)
+        write_keyed(
+            spark.createDataFrame([(i, i) for i in range(40)], "k int, v int"),
+            path, "k", n_buckets=4,
+        )
+        write(path, spark.createDataFrame([(39, 2**40)], "k int, v bigint"))
+        out = read_keyed(spark, path)
+        assert isinstance(out.schema["v"].dataType, LongType), name
+        rows = dict(map(tuple, out.collect()))
+        assert rows[39] == 2**40 and rows[0] == 0 and len(rows) == 40, name
+        assert get_keyed(spark, path, [1]).collect()[0]["v"] == 1, name

@@ -8,6 +8,7 @@ queries (approximate ops) must at least run and return a stable schema.
 from __future__ import annotations
 
 import os
+import warnings
 
 import pytest
 
@@ -58,10 +59,18 @@ def parity_problems(spark):
     # harness (observed ~1/300: a transient executor/Arrow hiccup
     # under 6 simultaneous queries) must not abort the -x gate.  A
     # genuinely wrong pair fails both passes and is reported with
-    # both messages.
+    # both messages.  A concurrent failure the serial retry clears is
+    # still reported (pytest's warnings summary prints it on every
+    # run), so intermittent nondeterminism stays visible.
     for name, problems in list(results.items()):
         if problems:
             serial = one(name)
+            if not serial:
+                warnings.warn(
+                    f"{name}: concurrent-pass failure cleared by the "
+                    f"serial retry: " + "; ".join(problems),
+                    stacklevel=1,
+                )
             results[name] = (
                 [f"(confirmed serially) {p}" for p in serial]
                 if serial

@@ -96,6 +96,44 @@ def test_footer_minmax_matches_computed(spark, tmp_path, monkeypatch):
     assert ca["d"].min == "2030-01-01"
 
 
+def test_footer_minmax_bails_on_emptied_generation(spark, tmp_path):
+    """A generation the manifest lists but whose parquet files are gone
+    must not be trusted: the footer helper bails to {} and the stamped
+    min/max come from the aggregate over what the scan sees; with the
+    directory itself gone, analysis fails loudly."""
+    import glob
+    import os
+    import shutil
+
+    from cascading_hbase_spark.keyed import stats as S
+    from cascading_hbase_spark.keyed.table import _load_meta, read_keyed
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(i, i * 3) for i in range(40)], "k int, v int")
+    write_keyed(df, path, "k", n_buckets=4)
+    meta = _load_meta(path)
+    top = max(meta["gens"], key=int)  # the bucket holding the max key
+    gdir = os.path.join(path, f"_kt_bucket={top}", f"_kt_gen={meta['gens'][top]}")
+    victims = glob.glob(os.path.join(gdir, "*.parquet"))
+    assert victims
+    for f in victims:
+        os.remove(f)
+
+    types = {f.name: f.dataType for f in df.schema.fields}
+    assert S._footer_min_max(path, meta, types) == {}
+    analyze_keyed(spark, path, exact=True)
+    live = read_keyed(spark, path)
+    lo, hi = live.agg(F.min("k"), F.max("k")).collect()[0]
+    cs = {r.column: r for r in column_stats(spark, path).collect()}
+    assert (cs["k"].min, cs["k"].max) == (str(lo), str(hi))
+    assert table_stats(path)["row_count"] == live.count()
+
+    shutil.rmtree(gdir)
+    assert S._footer_min_max(path, meta, types) == {}
+    with pytest.raises(FileNotFoundError, match="missing bucket gens"):
+        analyze_keyed(spark, path)  # approx: not a no-op re-analyze
+
+
 def test_approx_ndv_within_contract(spark, table):
     """approx_count_distinct's default rsd is 5%; allow a generous
     5-sigma band so the test never flakes while still catching a
