@@ -104,13 +104,7 @@ def main() -> None:
 
     from cascading_hbase_spark.operators.zorder import write_zordered
 
-    # spread= preserves the r13-shipped input shape for this entry now
-    # that the split-starved repartition is per-consumer (r14): the
-    # range exchange's map side otherwise runs on the single-row-group
-    # scan's one task (A/B: 1.925 s unspread vs 1.573 s spread).
-    # Methodology (count-drain timing of the same operator over the
-    # same rows) is unchanged.
-    li = load_table(spark, sf_dir, "lineitem", spread="l_orderkey")
+    li = load_table(spark, sf_dir, "lineitem")
     walls = []
     zdir = tempfile.mkdtemp(prefix="bench-zorder-")
     try:

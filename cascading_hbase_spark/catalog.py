@@ -9,7 +9,6 @@ path and Catalyst's DataSource handles splits, pushdown, and pruning
 
 from __future__ import annotations
 
-import glob
 import os
 
 import pyspark.sql.functions as F
@@ -22,126 +21,17 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-# The unsplittable-input spread (guide §2.5) is PER-CONSUMER, not
-# per-table (r14): each query opts in via ``load_table(...,
-# spread="key")`` only when its own downstream plan reuses the key's
-# partitioning (a groupBy/window/join on the key — the forced exchange
-# then REPLACES one the query would pay anyway) or when the post-scan
-# per-row work is heavy enough (tokenize/explode/Arrow stage) to be
-# worth one extra shuffle.  The r13 per-table default was measured to
-# LOSE on any query whose consumer is a cheap map-side-reducible
-# aggregate or a broadcast-join chain (agg_pricing_summary -36%,
-# cogroup_inner -35%, join_star_revenue -20% on the driver bench):
-# nothing downstream reuses the key there, so the exchange is pure
-# cost.  Every chosen key is near-unique or uniform, so hash balance
-# is a non-issue.
-
-
-def _split_spec() -> dict[str, str | None]:
-    """Optional per-table FORCE override for A/B experiments, taking
-    precedence over the call-site ``spread`` argument:
-    ``SPARK_GRAFT_SPLIT_SPEC="lineitem:l_orderkey,events:off"``."""
-    spec = os.environ.get("SPARK_GRAFT_SPLIT_SPEC")
-    if not spec:
-        return {}
-    out: dict[str, str | None] = {}
-    for item in spec.split(","):
-        t, _, k = item.partition(":")
-        out[t.strip()] = None if k.strip() in ("off", "") else k.strip()
-    return out
-
-# (path, parallelism, mtime_ns, size) -> split-deficit decision, cached
-# so repeated load_table calls don't re-read footers; the key carries
-# the file identity and the parallelism the decision depends on, so a
-# regenerated parquet or a different-core session never sees a stale
-# entry (ADVICE r13).
-_LAYOUT_CACHE: dict[tuple, bool] = {}
-
-# A parquet scan parallelizes at row-group granularity; below this many
-# rows per available split the serial tail is trivial and the shuffle
-# isn't worth it.
-_MIN_ROWS_PER_SPLIT = 8192
-
-
-def _scan_is_split_starved(path: str, parallelism: int) -> bool:
-    """True when the parquet layout cannot produce enough scan splits
-    to use the cluster — e.g. the driver testdata's single-file,
-    single-row-group tables, or any one huge unsplittable file (guide
-    §2.5: fix at the source or repartition immediately after the
-    read).  Row groups are parquet's split atom, so splits <=
-    total row groups.  Local paths only: a scheme URI (object store)
-    is assumed production-laid-out, and a real deployment's files have
-    many row groups, so this returns False there and the repartition
-    never fires at scale."""
-    if os.environ.get("SPARK_GRAFT_SPLIT_STARVED_FIX", "1") == "0":
-        return False  # explicit opt-out (A/B measurement, debugging)
-    if "://" in path:
-        return False
-    try:
-        st = os.stat(path)
-        cache_key = (path, parallelism, st.st_mtime_ns, st.st_size)
-    except OSError:
-        cache_key = (path, parallelism, 0, 0)
-    cached = _LAYOUT_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    try:
-        import pyarrow.parquet as pq
-
-        files = [path] if os.path.isfile(path) else sorted(
-            glob.glob(os.path.join(path, "*.parquet"))
-        )
-        row_groups = rows = 0
-        starved = False
-        if files and len(files) < parallelism:
-            for f in files[:64]:
-                md = pq.ParquetFile(f).metadata
-                row_groups += md.num_row_groups
-                rows += md.num_rows
-            starved = (
-                row_groups < parallelism
-                and rows // max(row_groups, 1) >= _MIN_ROWS_PER_SPLIT
-            )
-    except Exception:
-        starved = False
-    _LAYOUT_CACHE[cache_key] = starved
-    return starved
-
 
 def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, spread: str | None = None
-) -> DataFrame:
-    """Load one table.  ``spread`` opts this CONSUMER into the
-    unsplittable-input repartition (guide §2.5): when the parquet
-    layout cannot feed the cluster (single row group — the scan's
-    split atom), repartition by ``spread`` right after the read.
-    Callers pass the key their own downstream plan reuses (their
-    groupBy/window/join key), so the forced exchange replaces one the
-    query would pay anyway; queries whose first reduction is already
-    map-side cheap leave it off — measured per query in
-    OPTIMIZATION_r14.md.  No-op on production-shaped inputs
-    (_scan_is_split_starved) and under the kill-switch."""
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load table ``name`` of the scale-factor directory ``sf_dir``."""
     # The harness may hand us a vanilla session; pin the timestamp
     # semantics our queries (and the DuckDB oracle) assume.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
-
-    def _parallelize(df: DataFrame) -> DataFrame:
-        # Key hash (no sort-before-repartition cost, deterministic
-        # under task retry); results are partitioning-invariant — the
-        # whole registry is order-insensitive by construction (hash
-        # sampling, sorted collect_lists, total tie-breaks).
-        spec = _split_spec()
-        key = spec[name] if name in spec else spread
-        par = spark.sparkContext.defaultParallelism
-        if key is not None and _scan_is_split_starved(path, par):
-            return df.repartition(par, F.col(key))
-        return df
-
     if name == "events":
         # events.ts arrives with a physical type that varies by how the
         # driver generated the parquet (TIMESTAMP(NANOS) -> bigint under
@@ -150,7 +40,7 @@ def load_table(
         # validated against, and the one time functions like
         # ``unix_micros`` accept.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _parallelize(spark.read.parquet(path))
+        df = spark.read.parquet(path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -159,7 +49,7 @@ def load_table(
             # session zone.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return _parallelize(spark.read.parquet(path))
+    return spark.read.parquet(path)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

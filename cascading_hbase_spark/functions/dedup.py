@@ -118,10 +118,9 @@ def _spread(df: DataFrame, key: str) -> DataFrame:
     input already has many partitions and this is a cheap key shuffle
     that also pre-locates the downstream per-doc aggregates.
 
-    Skipped when the input already carries enough partitions — in
-    particular ``catalog.load_table`` now repartitions split-starved
-    inputs by the same key itself, and a second identical exchange
-    here would shuffle the rows twice (both REPARTITION_BY_COL
+    Skipped when the input already carries enough partitions, e.g. a
+    caller that repartitioned by the same key: a second identical
+    exchange would shuffle the rows twice (both REPARTITION_BY_COL
     exchanges are user-specified, so the physical planner keeps
     both)."""
     par = df.sparkSession.sparkContext.defaultParallelism

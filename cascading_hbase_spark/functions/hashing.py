@@ -11,13 +11,10 @@ Fast (``xxhash64`` mode): Spark's native xxhash64 masked to the same
 non-negative 60-bit range.  ~whole-stage-codegen'd long arithmetic
 instead of md5 + hex-string parsing — the dedup/similarity operators
 only need *a* stable 64-bit hash, so ``bench.py`` flips this on (the
-oracle comparison is not run there).  Toggle via ``use_fast_hash()``
-or env ``SPARK_GRAFT_FAST_HASH=1``.
+oracle comparison is not run there).  Toggle via ``use_fast_hash()``.
 """
 
 from __future__ import annotations
-
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column
@@ -31,7 +28,7 @@ HASH64_SQL = "CAST(('0x' || substring(md5({x}), 1, 15)) AS BIGINT)"
 
 _MASK60 = (1 << 60) - 1
 
-_fast = os.environ.get("SPARK_GRAFT_FAST_HASH", "") in ("1", "true", "yes")
+_fast = False
 
 
 def use_fast_hash(enabled: bool = True) -> None:

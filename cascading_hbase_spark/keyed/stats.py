@@ -161,8 +161,6 @@ def _footer_min_max(
     no parquet file, or anything about the footers is unreadable."""
     import os as _os
 
-    if _os.environ.get("SPARK_GRAFT_FOOTER_STATS", "1") == "0":
-        return {}
     gens = meta.get("gens")
     if not gens or meta.get("ttl") or "://" in path:
         return {}

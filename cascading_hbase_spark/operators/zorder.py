@@ -16,20 +16,10 @@ z-value — the same single shuffle a plain sorted write costs.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 __all__ = ["morton2", "zvalue", "write_zordered"]
-
-# Input size above which route="auto" picks the percentile-cut routing
-# over the range partitioner (see write_zordered).  Parameterised for
-# A/B and cluster tuning; note the DEFAULT route is "range" — the
-# measured winner at both tested scales (OPTIMIZATION_r14).
-_HIST_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_ZORDER_HIST_MIN_BYTES", str(1 << 30))
-)
 
 # Magic-number bit spreading (interleave-ready): after these steps the
 # 16 low bits of x occupy the even bit positions of a 32-bit lane.
@@ -92,124 +82,27 @@ def zvalue(df: DataFrame, cols: list[str], bits: int = 16) -> DataFrame:
     )
 
 
-def _input_bytes(df: DataFrame) -> int | None:
-    """Total size of the scan's input files, or None when unknowable
-    (non-local URIs, no file scan under the plan)."""
-    try:
-        total = 0
-        files = df.inputFiles()
-        if not files:
-            return None
-        for f in files:
-            if f.startswith("file:"):
-                f = f[len("file:"):]
-            elif "://" in f:
-                return None  # object store: size unknown driver-side
-            total += os.path.getsize(f)
-        return total
-    except Exception:
-        return None
-
-
-def _partition_labels(df: DataFrame, n: int) -> list[int]:
-    """For each shuffle partition ``i`` of an ``n``-way hash
-    repartition, an int label whose Murmur3 hash lands exactly on
-    ``i`` — so routing by label places each z-run in its own partition
-    (and therefore its own output file) with zero collisions.  Found
-    with one tiny driver-side job over candidate ints (64*n candidates
-    cover all residues with overwhelming probability; widened if
-    not)."""
-    spark = df.sparkSession
-    lo, hi = 0, 64 * n
-    labels: dict[int, int] = {}
-    while len(labels) < n:
-        cand = spark.range(lo, hi).select(
-            F.col("id").cast("int").alias("lbl"),
-            F.pmod(F.hash(F.col("id").cast("int")), F.lit(n)).alias("p"),
-        )
-        for r in cand.collect():
-            labels.setdefault(r.p, r.lbl)
-        lo, hi = hi, hi + 64 * n
-    return [labels[i] for i in range(n)]
-
-
 def write_zordered(
     df: DataFrame,
     path: str,
     cols: list[str],
     n_files: int,
     bits: int = 16,
-    route: str | None = None,
 ) -> None:
     """Write ``df`` as parquet clustered on the Z-curve over ``cols``:
-    partition by z-value into ``n_files`` contiguous z-runs, sort
-    within each, drop the helper columns.  Each output file then holds
+    range-partition by z-value into ``n_files`` contiguous z-runs, sort
+    within each, drop the helper column.  Each output file then holds
     a compact Z-region — narrow min/max envelopes on BOTH columns, so a
     selective predicate on either skips most files at scan time.
 
-    Routing (``route`` / ``SPARK_GRAFT_ZORDER_ROUTE``):
-
-    - ``"range"``: ``repartitionByRange`` — the range partitioner's
-      sampling job RE-EXECUTES the full-width child plan, so the table
-      is computed twice (guide §8: the heavy bytes move/compute more
-      than once).  Cheapest at small scale, where the re-execution
-      costs less than an extra aggregate.
-    - ``"hist"``: z-run boundaries from ONE narrow aggregate
-      (``approx_percentile`` over ``_z`` alone — 2 source columns, not
-      the full row), rows route map-side by counting cuts below their
-      z, and a plain hash repartition on a per-run LABEL (chosen so
-      each run's hash lands on its own partition — no collisions, no
-      sampling pass) places the runs.  The full-width plan executes
-      exactly once.
-    - ``"auto"``: ``hist`` when the scanned input exceeds
-      ``SPARK_GRAFT_ZORDER_HIST_MIN_BYTES`` (1 GiB default) or its
-      size is unknowable (object store), else ``range``.
-
-    Default: ``"range"`` — the measured winner at BOTH tested scales
-    (OPTIMIZATION_r14 sf1 A/B: range 2.70 s vs hist 4.4-5.0 s on a
-    6M-row lineitem; the r13 hypothesis that the sampling
-    re-execution dominates at 10x did NOT hold — this table's child
-    plan is a narrow scan+project, so re-executing it costs less than
-    the t-digest cut aggregate).  ``hist`` is kept, parameterised,
-    for the guide-§8 shape where it should win: a child whose rows
-    are wide or expensive to compute (binary payloads, upstream
-    joins), where a second full execution is the dominant cost.  An
-    adopter flips ``SPARK_GRAFT_ZORDER_ROUTE=auto`` (or passes
-    ``route=``) with their own measurement."""
-    route = route or os.environ.get("SPARK_GRAFT_ZORDER_ROUTE", "range")
-    if route == "auto":
-        size = _input_bytes(df)
-        route = "hist" if (size is None or size >= _HIST_MIN_BYTES) else "range"
-    z = zvalue(df, cols, bits)
-    if route == "range" or n_files == 1:
-        (
-            z.repartitionByRange(n_files, F.col("_z"))
-            .sortWithinPartitions("_z")
-            .drop("_z")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        return
-    # hist: decide boundaries on the narrow z column, move the wide
-    # rows exactly once (guide §8's "decide with small rows" pattern).
-    qs = ", ".join(f"{(i + 1) / n_files:.10f}D" for i in range(n_files - 1))
-    cuts = z.select("_z").agg(
-        F.expr(f"approx_percentile(_z, array({qs}), 1000)").alias("c")
-    ).collect()[0]["c"]
-    labels = _partition_labels(df, n_files)
-    run = F.aggregate(
-        F.array(*[F.lit(int(c)) for c in cuts]),
-        F.lit(0),
-        lambda acc, c: acc + F.when(F.col("_z") > c, 1).otherwise(0),
-    )
-    label = F.element_at(
-        F.array(*[F.lit(l) for l in labels]), run + 1
-    )
+    The range partitioner's sampling job re-executes the child plan, so
+    the input is computed twice; for a narrow scan+project child that is
+    cheaper than a separate boundary aggregate (OPTIMIZATION_r14)."""
     (
-        z.withColumn("_route", label)
-        .repartition(n_files, F.col("_route"))
+        zvalue(df, cols, bits)
+        .repartitionByRange(n_files, F.col("_z"))
         .sortWithinPartitions("_z")
-        .drop("_z", "_route")
+        .drop("_z")
         .write.mode("overwrite")
         .parquet(path)
     )

@@ -35,11 +35,7 @@ def query(name: str, oracle: str | None = None, bench: bool = False):
 
 
 def _load_all() -> None:
-    # Import for registration side effects.  Registration order is the
-    # driver's verification order: round 1 only checked the first 50
-    # registered queries, so the modules that went unverified that round
-    # (windows, events, llm, multimodal, streaming, skew) now register
-    # FIRST, and the 49 already-green core/joins/aggregates pairs last.
+    # Import for registration side effects.
     from cascading_hbase_spark.queries import windows  # noqa: F401
     from cascading_hbase_spark.queries import events  # noqa: F401
     from cascading_hbase_spark.queries import llm  # noqa: F401
@@ -52,116 +48,4 @@ def _load_all() -> None:
     from cascading_hbase_spark.queries import tpch  # noqa: F401
 
 
-# --- Driver verification order -------------------------------------
-#
-# The driver's per-round correctness budget checks the FIRST ~50
-# entries of ``queries()``.  Rounds 6-7 proved a hand-maintained
-# priority list rots (the r07 budget re-verified 50 already-green
-# pairs because the list was not rotated), so the order is now DERIVED
-# from the committed ``CORRECTNESS_r*.json`` artifacts at import time
-# (VERDICT r07 item 1):
-#
-#   1. ``_CHANGED_THIS_ROUND`` — pairs whose query/oracle code changed
-#      this round (standing rule: a changed pair must re-verify the
-#      same round it changes).
-#   2. never-driver-verified pairs, registration order.
-#   3. everything else, stalest newest-verdict first (testdata
-#      regenerates per round, so verdict age is the weakest link in
-#      the CORRECTNESS evidence), registration order as tiebreak.
-#
-# The rotation is therefore automatic: when a round's verdicts land,
-# the pairs it verified sink to the tail and the next-stalest 50 rise
-# to the head.  ``tools/rotate_priority.py`` prints the derived head
-# and regenerates ``tests/verdict_backlog.txt`` to match.
-
-# Pairs changed or added THIS round (round 9: reset to empty at round
-# start per the standing rule — the r08 verdicts landed, so the r08
-# hand-list would only burn driver slots re-verifying r08-green pairs.
-# Add a name here ONLY when its query/oracle code changes this round;
-# ``tools/round_end_check.py`` cross-checks this list against
-# ``git diff`` so a stale entry fails the round-end gate.)
-_CHANGED_THIS_ROUND: list[str] = [
-    # r14: reset to [] at round start (the r13 verdicts landed).
-    # Names are added below ONLY as their query/oracle code — or the
-    # engine plan shape under them — changes this round.
-    #
-    # r14: CHANGED pairs — the split-starved scan spread moved from
-    # per-table (catalog) to per-consumer (load_table(spread=...)),
-    # and these pairs' EFFECTIVE plans changed vs r13: the forced
-    # exchange was removed (measured regression on the driver metric)
-    # or newly added (measured win).  Row-identical (the spread is
-    # partitioning-invariant, proven both directions r12/r13); listed
-    # so the driver re-earns their evidence same-round.
-    "agg_pricing_summary",       # spread removed (was -36% driver)
-    "cogroup_inner",             # spread removed (was -35% driver)
-    "join_star_revenue",         # spread removed (was -20% driver)
-    "cms_frequency_contract",    # spread removed (-75% count-drain A/B)
-    "keyed_upsert_lww",          # spread removed (-56% count-drain A/B)
-    "multimodal_image_features", # spread removed (neutral A/B, r13 -14%)
-    "session_window_agg",        # user_id spread added (+9-12% A/B)
-    "sessionize_events",         # user_id spread added (+11% noop A/B)
-    # r14: CHANGED pairs — multi-scan restructures (VERDICT r13 item
-    # 4): one corpus pass / cached narrow relation instead of 3-5
-    # static scans of the same table.  Row-identical, 3-SF
-    # oracle-rehearsed this round; details in OPTIMIZATION_r14.md.
-    "tfidf_top_terms",           # one explode; totals/df as windows
-    "decile_lift_table",         # persisted 2-col ranking relation
-    "quantization_recall_audit", # persisted raw-float relation
-]
-
-# Number of head entries the driver's per-round budget is known to
-# reach (CORRECTNESS_r06/r07 both contained exactly the first 50).
-DRIVER_BUDGET = 50
-
-
-def _verdict_rounds() -> dict[str, int]:
-    """name -> newest driver round with a verdict, read from the
-    committed ``CORRECTNESS_r*.json`` artifacts at the repo root.
-    Every name in a file counts (pass or fail — presence means the
-    driver produced a verdict that round)."""
-    import glob
-    import json
-    import os
-
-    root = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "..")
-    newest: dict[str, int] = {}
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            rnd = int(os.path.basename(path).split("_r")[1].split(".")[0])
-            with open(path) as f:
-                names = [n for n in json.load(f) if isinstance(n, str)]
-        except Exception:
-            # malformed artifact (unreadable, bad JSON, or a shape whose
-            # iteration/keys aren't strings): ignore — this runs at
-            # import, and a bad driver file must never break the package
-            continue
-        for name in names:
-            newest[name] = max(newest.get(name, 0), rnd)
-    return newest
-
-
-def driver_order() -> list[str]:
-    """The verification order ``queries()`` exposes: changed-this-round
-    first, then never-verified, then stalest-verdict-first."""
-    newest = _verdict_rounds()
-    reg = list(QUERIES)
-    idx = {k: i for i, k in enumerate(reg)}
-    head = [k for k in _CHANGED_THIS_ROUND if k in QUERIES]
-    seen = set(head)
-    rest = sorted(
-        (k for k in reg if k not in seen),
-        key=lambda k: (newest.get(k, -1), idx[k]),
-    )
-    return head + rest
-
-
-def _reorder() -> None:
-    order = driver_order()
-    for d in (QUERIES, ORACLES):
-        snap = dict(d)
-        d.clear()
-        d.update({k: snap[k] for k in order if k in snap})
-
-
 _load_all()
-_reorder()

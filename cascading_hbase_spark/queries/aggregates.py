@@ -315,7 +315,7 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group (First after sorted GroupBy in Cascading).  Spark
     physical plan: partial top-k within partitions (WindowGroupLimit
     pushdown) then final — no full sort of the group."""
-    o = load_table(spark, sf_dir, "orders", spread="o_custkey")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), "o_orderkey")
     return (
         o.withColumn("rn", F.row_number().over(w))

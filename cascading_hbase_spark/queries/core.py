@@ -38,10 +38,7 @@ def keyed_upsert_lww(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-relational semantic (13 tuples -> 5 rows keyed on ``num``,
     MultiFamilyHBaseTest.java:57,71).  ``l_linenumber`` is the explicit
     write-order tiebreak standing in for the HBase cell timestamp
-    (HBaseScheme.java:127).  No spread: the struct-max_by partial
-    aggregate reduces to one row per key map-side, so shuffling raw
-    rows by the group key first was measured -56% (count-drain A/B,
-    r14)."""
+    (HBaseScheme.java:127)."""
     li = load_table(spark, sf_dir, "lineitem")
     # (l_orderkey, l_linenumber) alone is not unique in the synthetic
     # data; the write-order tiebreak must extend over EVERY output

@@ -98,7 +98,7 @@ def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the native ``F.session_window`` (merging session state); the oracle
     reconstructs sessions as gaps-and-islands SQL — independent
     formulations of the same semantics."""
-    e = load_table(spark, sf_dir, "events", spread="user_id")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("user_id", F.session_window("ts", "10 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"), F.max("ts").alias("last_event"))
@@ -511,7 +511,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated cousin.  Both window passes share one (user_id) shuffle —
     the lag and the running sum use the same partitioning, so Catalyst
     plans a single Exchange."""
-    e = load_table(spark, sf_dir, "events", spread="user_id")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros("ts")
     gap = us - F.lag(us).over(w)
@@ -574,9 +574,6 @@ def range_bin_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan."""
     from cascading_hbase_spark.functions.temporal import range_join
 
-    # No spread: events feeds BOTH the session build and the probe
-    # side here; the probe branch duplicates the forced exchange for
-    # no reuse — measured -18% (count-drain A/B, r14).
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros("ts")

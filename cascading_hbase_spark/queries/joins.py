@@ -1043,7 +1043,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     support counting and scales linearly (measured 2.4x wall for 10x
     data at the sf1 probe)."""
     def build() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem", spread="l_orderkey").select(
+        li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
         )
         return (

@@ -37,7 +37,7 @@ _SQL_SH = (
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy on content, deterministic representative."""
-    d = load_table(spark, sf_dir, "documents", spread="doc_id").select("doc_id", "text")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return d.groupBy("text").agg(
         F.min("doc_id").alias("doc_id"), F.count("*").alias("n_copies")
     )
@@ -354,7 +354,7 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the higher-order-function expression tree; min-of-repeats (bench.py)
     lands at ~0.9 s.  The plan itself is the one you'd want — broadcast
     BNL + windowed top-k, no shuffle of the candidate side."""
-    e = load_table(spark, sf_dir, "embeddings", spread="vec_id")
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8)
     return S.cosine_topk(e, q, "vec_id", "embedding", k=10)
 
@@ -2687,7 +2687,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking is a distributed top-k."""
     terms = ["spark", "window", "hash", "stream"]
     d = (
-        load_table(spark, sf_dir, "documents", spread="doc_id")
+        load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
         .select("doc_id", F.split("text", " ").alias("t"))
         .select(
@@ -2784,7 +2784,7 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cascading_hbase_spark.functions.hashing import hash64
 
     d = (
-        load_table(spark, sf_dir, "documents", spread="doc_id")
+        load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
         .select("doc_id", F.split("text", " ").alias("t"))
         .filter(F.size("t") >= 16)
@@ -3673,7 +3673,7 @@ def _doc_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, w1, w2, w3) word trigrams, built MAP-SIDE by zipping
     three shifted token slices (no posexplode + window self-pairing) —
     the trigram extension of ``lm_bigram_logprob``'s pair build."""
-    d = load_table(spark, sf_dir, "documents", spread="doc_id")
+    d = load_table(spark, sf_dir, "documents")
     t = d.select("doc_id", F.split("text", " ").alias("tok")).filter(
         F.col("tok").isNotNull() & (F.size("tok") >= 3)
     )

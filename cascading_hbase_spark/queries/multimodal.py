@@ -28,9 +28,6 @@ _BYTES16 = (
 
 
 def _payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # No spread: measured exactly neutral on the Arrow stage at sf0.1
-    # (count-drain A/B, r14) — the per-batch work is too light to pay
-    # for an exchange of the text payload.
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return M.attach_payload(d, "doc_id", "text")
 

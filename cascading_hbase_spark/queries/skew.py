@@ -282,7 +282,7 @@ def heavy_hitters_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops fitting."""
     from cascading_hbase_spark.functions.skew import misra_gries_candidates
 
-    d = load_table(spark, sf_dir, "documents", spread="doc_id")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select(F.explode(F.split("text", " ")).alias("t"))
     cand = misra_gries_candidates(tok, "t", k=64).select(
         F.col("t").alias("token")
@@ -366,9 +366,6 @@ def cms_frequency_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-occurrence shape described above."""
     from cascading_hbase_spark.functions.hashing import hash64
 
-    # No spread: the vocabulary aggregate reduces map-side and every
-    # downstream consumer derives from it — an extra doc_id exchange
-    # measured -75% on the count-drained A/B (r14).
     d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tok = d.select(F.explode(F.split("text", " ")).alias("t"))
 

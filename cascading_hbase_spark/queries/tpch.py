@@ -593,7 +593,7 @@ def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderdate")
     )
-    li = load_table(spark, sf_dir, "lineitem", spread="l_orderkey").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     lo = li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))

@@ -47,27 +47,13 @@ def get_session(app_name: str = "cascading-hbase-spark", master: str | None = No
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # Let the planner pick shuffled-hash join when a per-partition
-        # build side fits (guide §3.1/§9): SHJ skips both sort passes
-        # of sort-merge.  The 64 MB AQE threshold additionally rewrites
-        # planned sort-merge joins to SHJ at runtime from MEASURED
-        # partition sizes — bounded per-task build memory at any
-        # scale, graceful (AQE only converts when every partition
-        # fits).  Scale evidence (OPTIMIZATION_r14, one-process A/B at
-        # sf1/10x, noop-drained): q21 +8%, dedup_minhash +9%,
-        # join_star +5%, setsim +5%, cogroup -12% (0.27 s query) —
-        # net positive, so the static preference stays ON by default.
-        # Risk note (ADVICE r13): the STATIC preference decides from
-        # size ESTIMATES and SHJ's build side does not spill, so a
-        # badly underestimated or skewed build partition can OOM an
-        # executor; `SPARK_GRAFT_STATIC_SHJ=0` reverts to sort-merge
-        # preference (the AQE measured-size conversion below stays
-        # active either way) for clusters where that risk dominates.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            "true"
-            if os.environ.get("SPARK_GRAFT_STATIC_SHJ", "1") == "0"
-            else "false",
-        )
+        # build side fits: SHJ skips both sort passes of sort-merge, and
+        # the 64 MB AQE threshold below also rewrites planned sort-merge
+        # joins to SHJ at runtime from measured partition sizes.  Risk:
+        # the static preference decides from size estimates and SHJ's
+        # build side does not spill, so a badly underestimated or skewed
+        # build partition can OOM an executor.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             "64MB",

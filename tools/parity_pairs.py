@@ -4,7 +4,8 @@
     python tools/parity_pairs.py q21_suppliers_kept_waiting,cms_frequency_contract [sf_dir ...]
 
 Defaults to all three testdata SFs.  Vanilla session, DuckDB oracle,
-same compare as tools/dress_rehearsal.py.
+same compare as tests/test_oracle_parity.py (which runs every pair at
+one SF: ``SPARK_GRAFT_T2_DIR=<sf_dir> pytest tests/test_oracle_parity.py``).
 """
 
 from __future__ import annotations
