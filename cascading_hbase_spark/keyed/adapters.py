@@ -67,10 +67,12 @@ class KeyedStoreAdapter(ABC):
     ``tests/test_adapters.py`` enforces them against each registered
     implementation):
 
-    - ``upsert`` is last-write-wins per key ACROSS calls, and within a
-      call the store keeps one row per key (later-arriving batches win
-      over earlier ones — ``MultiFamilyHBaseTest.java:57,71``'s 13
-      tuples / 5 stored rows);
+    - ``upsert`` is last-write-wins per key ACROSS calls (later batches
+      win over earlier ones — ``MultiFamilyHBaseTest.java:57,71``'s 13
+      tuples / 5 stored rows), and within a call the store keeps one
+      row per key: the one with the highest non-key column tuple,
+      nulls lowest — the keyed table's rule without ``seq_col``, so
+      the result never depends on arrival order or partitioning;
     - ``scan(start, stop)`` is the half-open key range ``[start,
       stop)`` in the key's natural order, with ``fields`` projecting
       columns (the key is always included, mirroring
@@ -227,12 +229,21 @@ class MemoryKeyedStoreAdapter(KeyedStoreAdapter):
 
     def upsert(self, df: DataFrame) -> None:
         store = self._require() if self.exists() else {}
-        # within-batch LWW: later rows win, mirroring arrival order
-        for r in df.collect():
+        # within-batch LWW: rows go in ascending non-key tuple order, so
+        # each key keeps its content-max row whatever the arrival order
+        for r in sorted(df.collect(), key=self._content):
             store[r[self.key]] = r
         self._rows = store
         if self._schema is None:
             self._schema = df.schema
+
+    def _content(self, row) -> tuple:
+        """A row's non-key values in column order, nulls lowest and NaN
+        highest, as Spark sorts them."""
+        return tuple(
+            (0,) if v is None else (2,) if v != v else (1, v)
+            for c, v in row.asDict().items() if c != self.key
+        )
 
     def delete(self, spark, keys: list) -> None:
         store = self._require()

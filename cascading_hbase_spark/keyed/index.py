@@ -84,10 +84,9 @@ from pyspark.sql.types import (
 from cascading_hbase_spark.keyed.table import (
     DEFAULT_RETAIN,
     SinkMode,
-    _gc_orphans,
+    _attach_stream_stamp,
+    _commit_meta,
     _load_meta,
-    _save_meta,
-    _write_history,
     _writer_lock,
     apply_changefeed,
     changefeed_keyed,
@@ -519,10 +518,7 @@ def _index_meta_commit(ipath: str, mutate) -> None:
         info = dict(info)
         mutate(info)
         meta["index_of"] = info
-        meta["version"] = meta.get("version", 1) + 1
-        _save_meta(ipath, meta)
-        _write_history(ipath, meta)
-        _gc_orphans(ipath, meta)
+        _commit_meta(ipath, meta)
 
 
 def attach_index_stream_stamp(path: str, col: str, checkpoint: str) -> None:
@@ -534,27 +530,10 @@ def attach_index_stream_stamp(path: str, col: str, checkpoint: str) -> None:
     clobber guard), and every stream start can cross-check the
     checkpoint's planned offsets against the APPLIED stamp.
     Idempotent for the same checkpoint; a different one raises."""
-
-    def mutate(info: dict) -> None:
-        st = info.get("stream")
-        if st is not None:
-            if st.get("checkpoint") != checkpoint:
-                raise StaleIndexError(
-                    f"index on {col!r} is stream-maintained under "
-                    f"checkpoint {st.get('checkpoint')!r}; rebuild with "
-                    f"create_index to move it to a new checkpoint"
-                )
-            raise _AlreadyAttached()
-        info["stream"] = {"checkpoint": checkpoint, "batch_id": -1}
-
-    try:
-        _index_meta_commit(_index_path(path, col), mutate)
-    except _AlreadyAttached:
-        pass
-
-
-class _AlreadyAttached(Exception):
-    """Internal: the attach stamp is already present (no-op commit)."""
+    _attach_stream_stamp(
+        _index_path(path, col), "index_of", checkpoint, StaleIndexError,
+        "create_index",
+    )
 
 
 def drop_index(path: str, col: str) -> None:

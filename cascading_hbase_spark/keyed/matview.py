@@ -52,11 +52,8 @@ from pyspark.sql import DataFrame, SparkSession
 from cascading_hbase_spark.keyed.table import (
     DEFAULT_RETAIN,
     SinkMode,
-    _gc_orphans,
+    _attach_stream_stamp,
     _load_meta,
-    _save_meta,
-    _write_history,
-    _writer_lock,
     changefeed_keyed,
     read_keyed,
     write_keyed,
@@ -495,28 +492,9 @@ def attach_stream_stamp(view_path: str, checkpoint: str) -> None:
     before, commits after) can still clobber it — the one-mode rule
     remains the deployment contract; this stamp closes the scheduled-
     refresh-after-attach ordering, the common race."""
-    with _writer_lock(view_path):
-        meta = _load_meta(view_path)
-        mv = meta.get("matview")
-        if mv is None:
-            raise ValueError(f"{view_path} is not an aggregate view")
-        st = mv.get("stream")
-        if st is not None:
-            if st.get("checkpoint") != checkpoint:
-                raise StaleViewError(
-                    f"view {view_path} is maintained under checkpoint "
-                    f"{st.get('checkpoint')!r}; rebuild with "
-                    f"create_aggregate_view to move it to a new checkpoint"
-                )
-            return  # already attached (possibly with applied batches)
-        meta["matview"] = {
-            **mv,
-            "stream": {"checkpoint": checkpoint, "batch_id": -1},
-        }
-        meta["version"] = meta.get("version", 1) + 1
-        _save_meta(view_path, meta)
-        _write_history(view_path, meta)
-        _gc_orphans(view_path, meta)
+    _attach_stream_stamp(
+        view_path, "matview", checkpoint, StaleViewError, "create_aggregate_view"
+    )
 
 
 def apply_sum_delta(

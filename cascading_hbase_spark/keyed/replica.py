@@ -26,12 +26,9 @@ from pyspark.sql import SparkSession
 from cascading_hbase_spark.keyed.table import (
     DEFAULT_RETAIN,
     SinkMode,
+    _attach_stream_stamp,
     _carried_policies,
-    _gc_orphans,
     _load_meta,
-    _save_meta,
-    _write_history,
-    _writer_lock,
     apply_changefeed,
     changefeed_keyed,
     read_keyed,
@@ -106,28 +103,9 @@ def attach_replica_stream_stamp(replica_path: str, checkpoint: str) -> None:
     corrupt loudly, so the divergence is permanent and undetected.
     Idempotent for the same checkpoint; a different one raises (one
     stream per follower)."""
-    with _writer_lock(replica_path):
-        meta = _load_meta(replica_path)
-        rep = meta.get("replica")
-        if rep is None:
-            raise ValueError(f"{replica_path} is not a replica")
-        st = rep.get("stream")
-        if st is not None:
-            if st.get("checkpoint") != checkpoint:
-                raise StaleReplicaError(
-                    f"replica {replica_path} is stream-maintained under "
-                    f"checkpoint {st.get('checkpoint')!r}; rebuild with "
-                    f"create_replica to move it to a new checkpoint"
-                )
-            return  # already attached (possibly with applied batches)
-        meta["replica"] = {
-            **rep,
-            "stream": {"checkpoint": checkpoint, "batch_id": -1},
-        }
-        meta["version"] = meta.get("version", 1) + 1
-        _save_meta(replica_path, meta)
-        _write_history(replica_path, meta)
-        _gc_orphans(replica_path, meta)
+    _attach_stream_stamp(
+        replica_path, "replica", checkpoint, StaleReplicaError, "create_replica"
+    )
 
 
 def sync_replica(

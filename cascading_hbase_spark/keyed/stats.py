@@ -50,10 +50,8 @@ from pyspark.sql.types import (
 )
 
 from cascading_hbase_spark.keyed.table import (
-    _gc_orphans,
+    _commit_meta,
     _load_meta,
-    _save_meta,
-    _write_history,
     _writer_lock,
     read_keyed,
 )
@@ -452,10 +450,7 @@ def analyze_keyed(
             "row_count": n,
             "columns": cols_out,
         }
-        cur["version"] = cur.get("version", 1) + 1
-        _save_meta(path, cur)
-        _write_history(path, cur)
-        _gc_orphans(path, cur)
+        _commit_meta(path, cur)
 
 
 def table_stats(path: str) -> dict:

@@ -12,7 +12,9 @@ Semantics (SURVEY.md §1.1, §2.1):
 - range scans with [start, stop) pruning per
   TableInputFormatWrap.java:55-65; field projection with the key
   prepended per HBaseScheme.java:157-162.
-- deletes per TableOutputFormatWrap.java:82, as an anti-join rewrite.
+- upserts and deletes per TableOutputFormatWrap.java:79-84: APPEND,
+  ``delete_keyed`` and ``merge_keyed`` all commit through one bucket
+  merge (``_merge``): anti-join the deleted keys, LWW the upserts.
 
 Physical layout — designed so the 100 TB append is incremental AND
 transactional:
@@ -31,20 +33,20 @@ so every write lands each key in the same bucket forever — until an
 explicit ``compact_keyed(..., n_buckets=...)`` re-samples them (the
 engine-side analogue of an HBase region split/major compaction, which
 the reference got for free from the region server,
-TableInputFormatWrap.java:40-82).  An APPEND merges *only the buckets
-its batch touches*: the merge materializes in a staging sibling, moves
-into fresh generation directories, and COMMITS by atomically replacing
-the manifest — readers resolve data only through the manifest's
-generation pointers, so a multi-bucket append is all-or-nothing (a
-crash anywhere pre-commit leaves the previous snapshot intact plus
-invisible orphans, GC'd by the next write).  Untouched buckets' files
-are never read or rewritten (the analogue of HBase routing a Put to one
-region, not compacting the whole table).  The seq counter persists
-before the data write, so a crashed-and-replayed batch never reuses a
-committed seq.  Range scans prune to the overlapping buckets
-(partition pruning) and push the key predicate into the parquet scan
-(row-group min/max skipping, since each bucket is written sorted by
-key).
+TableInputFormatWrap.java:40-82).  A merge rewrites *only the buckets
+its batch touches* into fresh generation directories (staged in a
+sibling and moved on the local plane, written in place on an object
+store) and COMMITS by atomically replacing the manifest — readers
+resolve data only through the manifest's generation pointers, so a
+multi-bucket merge is all-or-nothing (a crash anywhere pre-commit
+leaves the previous snapshot intact plus invisible orphans, GC'd by
+the next write).  Untouched buckets' files are never read or rewritten
+(the analogue of HBase routing a Put to one region, not compacting the
+whole table).  The seq counter persists before the data write, so a
+crashed-and-replayed batch never reuses a committed seq.  Range scans
+prune to the overlapping buckets (partition pruning) and push the key
+predicate into the parquet scan (row-group min/max skipping, since
+each bucket is written sorted by key).
 
 Commit history & GC: every commit snapshots the manifest into
 ``_kt_history/v<N>.json``.  GC retains exactly the generation dirs
@@ -67,6 +69,7 @@ from __future__ import annotations
 
 import contextlib
 import enum
+import functools
 import json
 import math
 import os
@@ -157,20 +160,14 @@ def _write_history(path: str, meta: dict) -> None:
     must not grow unboundedly over thousands of appends).  Manifests a
     LIVE savepoint covers are never pruned — the restore needs exactly
     that snapshot's pointers (r13; expired savepoints stop pinning)."""
-    hdir = os.path.join(path, HISTORY_DIR)
     version = meta["version"]
     _cp().write_json_atomic(_history_path(path, version), meta)
     pinned = {
         e.get("version") for e in _live_savepoints(path).values()
     }
-    for name in _cp().list_names(hdir):
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                v = int(name[1:-5])
-            except ValueError:
-                continue
-            if v <= version - HISTORY_KEEP and v not in pinned:
-                _cp().delete_quiet(os.path.join(hdir, name))
+    for v in list_generations(path):
+        if v <= version - HISTORY_KEEP and v not in pinned:
+            _cp().delete_quiet(_history_path(path, v))
 
 
 # ---------------------------------------------------------------------------
@@ -366,6 +363,20 @@ def _check_ident(name: str, what: str) -> None:
         )
 
 
+def _check_seq_col(seq_col: str | None, key: str, columns: list[str]) -> None:
+    """Fail fast BEFORE any manifest mutation: a typo'd registration
+    must not flip the table's version token and then crash later in
+    the merge (leaving manifest and data disagreeing)."""
+    if not seq_col:
+        return
+    _check_ident(seq_col, "seq_col")
+    if seq_col == key or seq_col not in columns:
+        raise ValueError(
+            f"seq_col {seq_col!r} must name a non-key column of the "
+            f"batch (columns: {columns})"
+        )
+
+
 def _order_cols(df_cols: list[str], key: str, seq_col: str | None) -> list:
     intra = [F.col(seq_col)] if seq_col else [
         F.col(c) for c in df_cols if c != key and c != SEQ_COL
@@ -515,13 +526,23 @@ def _commit_manifest(
             last[sb] = written[sb]
         else:
             gens.pop(sb, None)
-    meta["version"] = meta.get("version", 0) + 1
     # backfill for tables created before incarnation ids existed: every
     # commit heals them, so the replica/matview None-incarnation gate
     # (which forces a one-time rebuild when it cannot prove lineage)
     # converges instead of looping — a legacy base that committed since
     # the dependent was built always carries an id by then (r10 review)
     meta.setdefault("table_id", uuid.uuid4().hex)
+    _commit_meta(path, meta)
+
+
+def _commit_meta(path: str, meta: dict) -> None:
+    """Commit ``meta`` as the table's next version: bump the version,
+    flip the manifest, snapshot it into the history and GC generation
+    directories no retained manifest references.  Every commit, data or
+    meta-only, ends here; the caller holds the writer lock.  A manifest
+    without a version is a legacy table's implicit v1 (what
+    ``_migrate_legacy`` records), so its next commit is v2."""
+    meta["version"] = meta.get("version", 1) + 1
     _save_meta(path, meta)  # <- the commit point
     _write_history(path, meta)
     _gc_orphans(path, meta)
@@ -619,16 +640,12 @@ def _stage_and_publish(
     _update_zone_maps(df, meta)
     try:
         _write_partitioned(df, stage, key, by_bucket=by_bucket)
-        staged = sorted(
+        staged = {
             int(d.split("=", 1)[1])
             for d in _cp().list_names(stage)
             if d.startswith(BUCKET_COL + "=")
-        )
-        if affected is None:
-            affected = staged
-        else:
-            affected = sorted(set(affected) | set(staged))
-        _publish(stage, path, meta, affected)
+        }
+        _publish(stage, path, meta, sorted(set(affected or ()) | staged))
     finally:
         _cp().delete_tree_quiet(stage)
 
@@ -744,11 +761,9 @@ def _direct_publish(
             f"(offending uncommitted dirs deleted — a retry starts clean)"
         )
     written = {str(b): newgen[b] for b in produced}
-    if affected is None:
-        affected = produced
-    else:
-        affected = sorted(set(affected) | set(produced))
-    _commit_manifest(path, meta, affected, written)
+    _commit_manifest(
+        path, meta, sorted(set(affected or ()) | set(produced)), written
+    )
 
 
 # Manifest keys the engine owns; meta_extra may not shadow them.
@@ -800,6 +815,36 @@ def _merge_meta_extra(meta: dict, meta_extra: dict | None) -> None:
     meta.update(meta_extra)
 
 
+def _attach_stream_stamp(
+    path: str, app_key: str, checkpoint: str, stale: type, rebuild: str
+) -> None:
+    """Meta-only commit that stamps ``stream: {checkpoint, batch_id:
+    -1}`` into the manifest's ``app_key`` entry ("matview", "replica" or
+    "index_of") when a streaming maintainer attaches: from then on the
+    guard in ``_merge_meta_extra`` refuses scheduled batch commits, and
+    every stream start can cross-check its checkpoint against the
+    APPLIED stamp.  Idempotent for the same checkpoint (a stamp that
+    already advanced is kept); another checkpoint raises ``stale``,
+    whose remedy is a rebuild through ``rebuild``."""
+    with _writer_lock(path):
+        meta = _load_meta(path)
+        entry = meta.get(app_key)
+        if entry is None:
+            raise ValueError(f"{path} has no {app_key!r} manifest entry")
+        st = entry.get("stream")
+        if st is None:
+            meta[app_key] = {
+                **entry, "stream": {"checkpoint": checkpoint, "batch_id": -1},
+            }
+            _commit_meta(path, meta)
+        elif st.get("checkpoint") != checkpoint:
+            raise stale(
+                f"{path} is stream-maintained under checkpoint "
+                f"{st.get('checkpoint')!r}; rebuild with {rebuild} to move "
+                f"it to a new checkpoint"
+            )
+
+
 def write_keyed(
     df: DataFrame,
     path: str,
@@ -835,15 +880,17 @@ def write_keyed(
     cannot be overridden.
 
     ``seq_col`` is the explicit intra-batch write order (the stand-in
-    for the HBase cell timestamp); without it, ties collapse
-    deterministically by the row's full column tuple.  Naming it also
+    for the HBase cell timestamp); without it, a key's rows within one
+    batch collapse to the one with the highest non-key column tuple
+    (nulls lowest), whatever their arrival order.  Naming it also
     registers the column as the table's version token — a sticky
     TABLE property consulted by ``changefeed_keyed``: writes that omit
     ``seq_col`` leave the registration in effect, a different name
     replaces it, and ``seq_col=""`` clears it (the column becomes
-    ordinary payload again).  APPEND into an
-    existing table reads and rewrites only the buckets the batch
-    touches, staged to a sibling directory and swapped per-bucket.
+    ordinary payload again).  APPEND into an existing table goes
+    through the same bucket merge as ``delete_keyed`` and
+    ``merge_keyed``: it reads and rewrites only the buckets the batch
+    touches, into new generations published by one manifest flip.
 
     ``families`` maps column -> column-family name, mirroring the
     reference's multi-family field map (HBaseScheme.java:55,61-82);
@@ -861,18 +908,9 @@ def write_keyed(
     if key not in df.columns:
         raise ValueError(f"key column {key!r} not in {df.columns}")
     _check_ident(key, "key column")
-    if seq_col:
-        _check_ident(seq_col, "seq_col")
+    _check_seq_col(seq_col, key, df.columns)
     for zc in zone_cols or []:
         _check_ident(zc, "zone column")
-    if seq_col and (seq_col == key or seq_col not in df.columns):
-        # fail fast BEFORE any manifest mutation: a typo'd registration
-        # must not flip the table's version token and then crash later
-        # in the merge (leaving manifest and data disagreeing)
-        raise ValueError(
-            f"seq_col {seq_col!r} must name a non-key column of the "
-            f"batch (columns: {df.columns})"
-        )
     if ttl is not None and (
         not isinstance(ttl, dict) or set(ttl) != {"col", "seconds"}
         or ttl["col"] not in df.columns
@@ -966,7 +1004,6 @@ def write_keyed(
             return
 
         meta = _load_meta(path)
-        _migrate_legacy(path, meta)
         if ttl is not None:
             # TTL is set at creation (rides the creation commit) or via
             # set_ttl on an existing table; silently dropping it here
@@ -982,73 +1019,88 @@ def write_keyed(
                 f"zone_cols are fixed at table creation "
                 f"(table: {meta.get('zone_cols', [])}, got: {list(zone_cols)})"
             )
-        _backfill_schema(spark, path, meta, df)
-        # Additive schema evolution (HBase cells are schema-less per
-        # qualifier — a new column in an APPEND batch is a new qualifier,
-        # HBaseScheme.java value-field mapping): extend the manifest
-        # schema, default the new columns' family, and null-fill both
-        # sides of the merge.  Dropping columns is NOT supported — a
-        # batch missing known columns simply writes nulls for them only
-        # for its own keys' merged rows.
+        # Pin the batch (the delta, not the table): the bucket collect
+        # and the staged write must see the SAME rows even if the input
+        # plan is non-deterministic, and the upstream plan runs once.
+        _merge(
+            spark, path, meta, df.localCheckpoint(eager=True), None,
+            seq_col, meta_extra,
+        )
+
+
+def _merge(
+    spark: SparkSession,
+    path: str,
+    meta: dict,
+    upserts: DataFrame | None,
+    deletes: DataFrame | None,
+    seq_col: str | None,
+    meta_extra: dict | None,
+) -> None:
+    """The one bucket-merge commit behind APPEND, delete and MERGE, as
+    the reference sends Puts and Deletes through one record writer
+    (TableOutputFormatWrap.java:79-84).  Runs under the caller's writer
+    lock on pinned inputs; either side may be None.  A legacy flat
+    layout is migrated first.
+
+    Only the buckets either side touches are read and rewritten: the
+    ``deletes`` keys are anti-joined out, then the ``upserts`` rows win
+    last-write-wins (a key both deleted and upserted resolves
+    delete-then-insert), and one manifest flip publishes the result.
+    Only the upsert side evolves the schema, bumps ``next_seq`` and
+    registers ``seq_col``."""
+    _migrate_legacy(path, meta)
+    key, boundaries = meta["key"], meta["boundaries"]
+    _backfill_schema(spark, path, meta, upserts)
+    touched = []
+    if upserts is not None:
+        order = _order_cols(upserts.columns, key, seq_col)
+        # Additive schema evolution (a new column is a new HBase
+        # qualifier): older rows read it as typed nulls.  Columns are
+        # never dropped; a batch missing one writes nulls for its keys.
         declared = StructType.fromJson(json.loads(meta["schema"]))
-        known = {f.name for f in declared.fields}
         new_fields = [
-            f for f in df.schema.fields
-            if f.name not in known and f.name not in (SEQ_COL, BUCKET_COL)
+            f for f in upserts.schema.fields
+            if f.name not in declared.names and f.name not in (SEQ_COL, BUCKET_COL)
         ]
         if new_fields:
-            meta["schema"] = StructType(
-                list(declared.fields) + new_fields
-            ).json()
-            fam = meta.get("families", {})
+            meta["schema"] = StructType(declared.fields + new_fields).json()
             for f in new_fields:
-                fam.setdefault(f.name, "cf")
-            meta["families"] = fam
-        boundaries = meta["boundaries"]
+                meta.setdefault("families", {}).setdefault(f.name, "cf")
         seq = meta["next_seq"]
-        # Persist the seq bump BEFORE the data write: if the merge crashes
-        # and the batch replays, it gets a fresh seq — LWW order stays write
-        # order instead of degrading to arbitrary column-tuple ties.
+        # The seq bump persists BEFORE the data write, so a crashed and
+        # replayed batch never reuses a committed seq.
         meta["next_seq"] = seq + 1
         _save_meta(path, meta)
-        # The version-token registration is a TABLE property (sticky
-        # across writes that omit seq_col, replaced by a different name,
-        # cleared by seq_col="") — mutated only AFTER the early seq-bump
-        # save, so the flip rides the publish-time manifest write (the
-        # commit point), like meta_extra: a write that fails mid-merge
-        # must not re-register a table whose data it never changed.
+        # The sticky version-token registration ("" clears it) and
+        # meta_extra ride the publish below, never the early save: a
+        # merge that fails must not re-register the table or advance an
+        # application cursor without its data.
         if seq_col:
             meta["seq_col"] = seq_col
         elif seq_col == "":
             meta.pop("seq_col", None)
-        batch = df.withColumn(SEQ_COL, F.lit(seq)).withColumn(
+        upserts = upserts.withColumn(SEQ_COL, F.lit(seq)).withColumn(
             BUCKET_COL, _bucket_expr(key, boundaries)
         )
-        # Pin the batch's contents before anything inspects it: the
-        # affected-bucket collect and the staged write must see the SAME
-        # rows even if the input plan is non-deterministic (rand/sample/
-        # a source that changed between evaluations).  localCheckpoint
-        # materializes the incoming delta once (the delta, not the
-        # table — bounded by batch size at any scale) and also spares
-        # re-running an expensive upstream plan twice.
-        batch = batch.localCheckpoint(eager=True)
-        # Only the buckets this batch touches participate in the merge;
-        # every other bucket's generation pointer (and files) is untouched.
-        affected = sorted(
-            r[0] for r in batch.select(BUCKET_COL).distinct().collect()
-        )
-        current = _read_raw(spark, path, meta, buckets=set(affected))
+        touched.append(upserts.select(BUCKET_COL))
+    if deletes is not None:
+        touched.append(deletes.select(_bucket_expr(key, boundaries)))
+    # one job collects the buckets of both sides
+    affected = sorted(
+        r[0] for r in functools.reduce(DataFrame.union, touched).distinct().collect()
+    )
+    merged = _read_raw(spark, path, meta, buckets=set(affected))
+    if deletes is not None:
+        merged = merged.join(deletes, key, "left_anti")
+    if upserts is not None:
         merged = _lww(
-            current.unionByName(batch, allowMissingColumns=True),
-            key,
-            _order_cols(df.columns, key, seq_col),
+            merged.unionByName(upserts, allowMissingColumns=True), key, order
         )
         _record_written_types(meta, merged)
-        # Merged only now — NOT into the early seq-bump save above — so
-        # a crash between the two cannot advance application cursors
-        # without their data.
-        _merge_meta_extra(meta, meta_extra)
-        _stage_and_publish(merged, path, key, meta, affected)
+    _merge_meta_extra(meta, meta_extra)
+    # a bucket the merge empties loses its generation pointer
+    _stage_and_publish(merged, path, key, meta, affected)
 
 
 # ---------------------------------------------------------------------------
@@ -1056,7 +1108,7 @@ def write_keyed(
 # ---------------------------------------------------------------------------
 
 def _backfill_schema(
-    spark: SparkSession, path: str, meta: dict, batch: DataFrame
+    spark: SparkSession, path: str, meta: dict, batch: DataFrame | None
 ) -> None:
     """Legacy manifests predate the stored schema, which every read now
     plans from: recover it from the live files (the inferring read),
@@ -1066,7 +1118,7 @@ def _backfill_schema(
     if meta.get("gens"):
         live = _read_raw(spark, path, meta).drop(SEQ_COL, BUCKET_COL)
         meta["schema"] = live.schema.json()
-    else:
+    elif batch is not None:
         meta["schema"] = batch.schema.json()
 
 
@@ -1352,35 +1404,17 @@ def get_keyed(
 def delete_keyed(spark: SparkSession, path: str, keys: DataFrame) -> None:
     """Delete rows whose key appears in ``keys`` (single-column DF) —
     the Delete dispatch of TableOutputFormatWrap.java:79-84 as an
-    anti-join rewrite of only the affected buckets."""
+    anti-join rewrite of only the affected buckets, through the same
+    merge commit as APPEND and MERGE (with no upserts: the seq counter
+    and the schema stay as they are)."""
     with _writer_lock(path):
         meta = _load_meta(path)
-        _migrate_legacy(path, meta)
-        key, boundaries = meta["key"], meta["boundaries"]
-        # Pin the key set before anything inspects it (same hazard the
-        # append path defends against with localCheckpoint): a
-        # non-deterministic keys plan (rand/sample/changed source) must
-        # yield the SAME keys to the affected-bucket collect and the
-        # anti-join, or a key could route to a bucket that is never
-        # rewritten and silently survive.
+        # Pin the key set: a non-deterministic keys plan must yield the
+        # SAME keys to the bucket collect and the anti-join, or a key
+        # could route to a bucket never rewritten and silently survive.
+        key = meta["key"]
         keys = keys.toDF(key).select(key).localCheckpoint(eager=True)
-        affected = sorted(
-            r[0]
-            for r in keys.select(_bucket_expr(key, boundaries).alias("b"))
-            .distinct()
-            .collect()
-        )
-        current = _read_raw(spark, path, meta, buckets=set(affected))
-        # Legacy-migrated manifests lack the stored schema; backfill it
-        # from the live snapshot so a delete that empties the whole
-        # table still leaves it readable (empty frame, right schema).
-        meta.setdefault("schema", current.drop(SEQ_COL, BUCKET_COL).schema.json())
-        remaining = current.join(keys, key, "left_anti")
-        # Staged rewrite of only the affected buckets; a bucket emptied by
-        # the delete is simply absent from the stage and loses its
-        # generation pointer at commit.
-        _stage_and_publish(remaining, path, key, meta, affected)
-
+        _merge(spark, path, meta, None, keys, None, None)
 
 
 def table_version(path: str) -> int:
@@ -1413,8 +1447,9 @@ def merge_keyed(
     — LWW decides).  A key both deleted and upserted in the same batch
     resolves delete-then-insert: the current row is removed and the
     batch's row survives.  Additive schema evolution applies like
-    APPEND.  Only buckets touched by EITHER side are rewritten; the
-    manifest flips once.
+    APPEND.  Both sides go through the one bucket merge that APPEND
+    and ``delete_keyed`` use: the buckets touched by EITHER side are
+    collected in one job and rewritten; the manifest flips once.
 
     ``expected_version`` (from ``table_version``) enables optimistic
     concurrency for read-modify-write cycles: the merge commits only
@@ -1433,74 +1468,22 @@ def merge_keyed(
                 f"caller expected {expected_version}: a concurrent commit "
                 f"landed after the batch was derived — re-read and retry"
             )
-        _migrate_legacy(path, meta)
-        key, boundaries = meta["key"], meta["boundaries"]
-        if seq_col:
-            _check_ident(seq_col, "seq_col")
-        if seq_col and (seq_col == key or seq_col not in changes.columns):
-            # fail fast before any manifest mutation (see write_keyed)
-            raise ValueError(
-                f"seq_col {seq_col!r} must name a non-key column of the "
-                f"changes batch (columns: {changes.columns})"
-            )
-        # Pin the batch once: the split, the affected-bucket collects and
+        key = meta["key"]
+        # the key lives in the manifest, so this is the earliest point
+        # the check can run — still before any manifest mutation
+        _check_seq_col(
+            seq_col, key, [c for c in changes.columns if c != change_col]
+        )
+        # Pin the batch once: the split, the affected-bucket collect and
         # the staged write must all see the same rows.
         changes = changes.localCheckpoint(eager=True)
         is_del = F.col(change_col) == "delete"
-        upserts = changes.filter(~is_del).drop(change_col)
-        del_keys = changes.filter(is_del).select(key)
-
-        # additive schema evolution, same contract as write_keyed APPEND
-        _backfill_schema(spark, path, meta, upserts)
-        declared = StructType.fromJson(json.loads(meta["schema"]))
-        known = {f.name for f in declared.fields}
-        new_fields = [
-            f for f in upserts.schema.fields
-            if f.name not in known and f.name not in (SEQ_COL, BUCKET_COL)
-        ]
-        if new_fields:
-            meta["schema"] = StructType(list(declared.fields) + new_fields).json()
-            fam = meta.get("families", {})
-            for f in new_fields:
-                fam.setdefault(f.name, "cf")
-            meta["families"] = fam
-
-        seq = meta["next_seq"]
-        # seq bump persists BEFORE the data write (crash-replay keeps
-        # LWW order = write order; see write_keyed)
-        meta["next_seq"] = seq + 1
-        _save_meta(path, meta)
-        # sticky table-level registration; "" clears — applied AFTER the
-        # early save so the flip rides the publish-time commit, like
-        # meta_extra (see write_keyed)
-        if seq_col:
-            meta["seq_col"] = seq_col
-        elif seq_col == "":
-            meta.pop("seq_col", None)
-        batch = upserts.withColumn(SEQ_COL, F.lit(seq)).withColumn(
-            BUCKET_COL, _bucket_expr(key, boundaries)
+        _merge(
+            spark, path, meta,
+            changes.filter(~is_del).drop(change_col),
+            changes.filter(is_del).select(key),
+            seq_col, meta_extra,
         )
-        affected = sorted(
-            {r[0] for r in batch.select(BUCKET_COL).distinct().collect()}
-            | {
-                r[0]
-                for r in del_keys.select(
-                    _bucket_expr(key, boundaries).alias("b")
-                ).distinct().collect()
-            }
-        )
-        current = _read_raw(spark, path, meta, buckets=set(affected))
-        after_delete = current.join(del_keys, key, "left_anti")
-        merged = _lww(
-            after_delete.unionByName(batch, allowMissingColumns=True),
-            key,
-            _order_cols(upserts.columns, key, seq_col),
-        )
-        _record_written_types(meta, merged)
-        # application metadata (e.g. a replica's sync cursor) commits in
-        # the same atomic manifest flip as the applied changes
-        _merge_meta_extra(meta, meta_extra)
-        _stage_and_publish(merged, path, key, meta, affected)
 
 
 def apply_changefeed(
@@ -1640,10 +1623,8 @@ def rollback_keyed(path: str, generation: int) -> None:
         for b, g in hist.get("last_gen", {}).items():
             last[b] = max(last.get(b, -1), g)
         meta["last_gen"] = last
-        meta["version"] = cur.get("version", 1) + 1
-        _save_meta(path, meta)  # <- the commit point
-        _write_history(path, meta)
-        _gc_orphans(path, meta)
+        meta["version"] = cur.get("version", 1)
+        _commit_meta(path, meta)
 
 
 def set_ttl(path: str, ts_col: str, seconds: float | None) -> None:
@@ -1663,10 +1644,7 @@ def set_ttl(path: str, ts_col: str, seconds: float | None) -> None:
             if ts_col not in {f.name for f in schema.fields}:
                 raise KeyError(f"ttl column {ts_col!r} not in table schema")
             meta["ttl"] = {"col": ts_col, "seconds": float(seconds)}
-        meta["version"] = meta.get("version", 1) + 1
-        _save_meta(path, meta)
-        _write_history(path, meta)
-        _gc_orphans(path, meta)
+        _commit_meta(path, meta)
 
 
 def _ttl_filter(df: DataFrame, ttl: dict) -> DataFrame:

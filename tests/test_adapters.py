@@ -53,6 +53,52 @@ def test_thirteen_rows_five_keys_last_write_wins(spark, adapter):
     assert _stored(adapter, spark) == FINAL
 
 
+# In-batch ties: for every key the LAST-arriving row is NOT its
+# content-max row, and key 3's last row is null — so a store that keeps
+# arrival order and one that keeps the highest non-key tuple (nulls
+# lowest) store different tables.
+TIES = [
+    (1, "a9"), (2, "b1"), (1, "a2"), (3, None), (2, "b7"),
+    (3, "c5"), (1, "a5"), (2, "b3"), (3, None),
+]
+CONTENT_MAX = {1: "a9", 2: "b7", 3: "c5"}
+
+
+def test_in_batch_ties_keep_content_max_row(spark, adapter):
+    """Within one upsert a key keeps its highest non-key tuple, not its
+    last-arriving row; a later upsert still wins over an earlier one,
+    whatever its content (null included)."""
+    adapter.upsert(_df(spark, TIES))
+    assert _stored(adapter, spark) == CONTENT_MAX
+    adapter.upsert(_df(spark, [(1, "a0"), (3, None)]))
+    assert _stored(adapter, spark) == {1: "a0", 2: "b7", 3: None}
+
+
+def test_in_batch_ties_ignore_order_and_partitioning(spark, adapter, tmp_path):
+    """The same batch permuted, repartitioned or read back from several
+    parquet files stores the same table, whether it creates the table
+    or merges into an existing one (alternately)."""
+    import random
+
+    rev = list(reversed(TIES))
+    perm = TIES[:]
+    random.Random(7).shuffle(perm)
+    _df(spark, perm).repartition(3).write.parquet(str(tmp_path / "files"))
+    batches = [
+        _df(spark, perm).repartition(4),
+        _df(spark, rev).repartition(2, "val"),
+        spark.read.parquet(str(tmp_path / "files")),
+    ]
+    for i, batch in enumerate(batches):
+        adapter.drop()
+        want = dict(CONTENT_MAX)
+        if i % 2:
+            adapter.upsert(_df(spark, [(1, "zz"), (4, "d1")]))
+            want[4] = "d1"
+        adapter.upsert(batch)
+        assert _stored(adapter, spark) == want, i
+
+
 def test_range_scan_half_open_and_projection(spark, adapter):
     adapter.upsert(_df(spark, THIRTEEN))
     got = adapter.scan(spark, start=2, stop=4)

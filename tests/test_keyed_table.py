@@ -258,20 +258,14 @@ def test_reader_survives_one_concurrent_commit(spark, tmp_path):
 
 
 @localfs_plane_only
-def test_legacy_flat_layout_migrates_on_append(spark, tmp_path):
-    """A pre-generation table (flat bucket dirs, no gens in the
-    manifest) must migrate in place on the first write, keeping every
-    bucket readable."""
+def _flatten_to_legacy(path: str) -> None:
+    """Devolve a table to the pre-generation layout: gen files moved up
+    into flat bucket dirs, ``gens`` and ``schema`` stripped from the
+    manifest."""
     import glob
     import json
     import shutil
 
-    path = str(tmp_path / "legacytable")
-    df = spark.createDataFrame(
-        [("a", 1), ("m", 2), ("z", 3)], "key string, val int"
-    )
-    write_keyed(df, path, "key", n_buckets=2)
-    # flatten to the legacy layout: move gen files up, strip manifest keys
     for g in glob.glob(os.path.join(path, "_kt_bucket=*", "_kt_gen=*")):
         bucket = os.path.dirname(g)
         for f in os.listdir(g):
@@ -283,6 +277,18 @@ def test_legacy_flat_layout_migrates_on_append(spark, tmp_path):
     meta.pop("gens"); meta.pop("schema")
     with open(mp, "w") as f:
         json.dump(meta, f)
+
+
+def test_legacy_flat_layout_migrates_on_append(spark, tmp_path):
+    """A pre-generation table (flat bucket dirs, no gens in the
+    manifest) must migrate in place on the first write, keeping every
+    bucket readable."""
+    path = str(tmp_path / "legacytable")
+    df = spark.createDataFrame(
+        [("a", 1), ("m", 2), ("z", 3)], "key string, val int"
+    )
+    write_keyed(df, path, "key", n_buckets=2)
+    _flatten_to_legacy(path)
     assert read_keyed(spark, path).count() == 3  # legacy read path
     # first append migrates, then merges — nothing lost
     write_keyed(spark.createDataFrame([("b", 4)], "key string, val int"), path, "key")
@@ -2553,3 +2559,133 @@ def test_append_of_wider_type_widens_manifest_schema(spark, tmp_path):
         rows = dict(map(tuple, out.collect()))
         assert rows[39] == 2**40 and rows[0] == 0 and len(rows) == 40, name
         assert get_keyed(spark, path, [1]).collect()[0]["v"] == 1, name
+
+
+@pytest.fixture(params=["local", "objectstore"])
+def plane(request):
+    """Run a test on the default plane and again on the object-store
+    plane (rename-free direct commits)."""
+    if request.param == "local":
+        yield
+        return
+    from cascading_hbase_spark.keyed.controlplane import use_control_plane
+    from cascading_hbase_spark.keyed.objectstore import ObjectStoreControlPlane
+
+    with use_control_plane(ObjectStoreControlPlane()):
+        yield
+
+
+def _collect_sites(spark, action) -> set[str]:
+    """Call sites in ``keyed/table.py`` of the ``collect()`` jobs that
+    ``action()`` launches, found through a job group (adaptive
+    execution may run one collect as several jobs)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"kt-collect-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    names = [
+        tracker.getStageInfo(s).name
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    return {
+        n for n in names
+        if n.startswith("collect at ")
+        and os.path.join("keyed", "table.py") in n
+    }
+
+
+def test_merge_collects_affected_buckets_once(spark, tmp_path, plane):
+    """A MERGE with both upserts and deletes finds the buckets of both
+    sides in one collect, and applies delete-then-insert."""
+    import pyspark.sql.functions as F
+
+    from cascading_hbase_spark.keyed.table import merge_keyed
+
+    path = str(tmp_path / "kt")
+    write_keyed(
+        spark.createDataFrame(
+            [(f"k{i:03d}", i) for i in range(100)], "key string, val int"
+        ),
+        path, "key", n_buckets=4,
+    )
+    changes = spark.createDataFrame(
+        [("k001", 0, "delete"), ("k050", -50, "update"),
+         ("k099", 0, "delete"), ("k100", 100, "insert")],
+        "key string, val int, _change string",
+    )
+    sites = _collect_sites(spark, lambda: merge_keyed(spark, path, changes))
+    assert len(sites) == 1, sites
+    rows = {r["key"]: r["val"] for r in read_keyed(spark, path).collect()}
+    assert len(rows) == 99
+    assert "k001" not in rows and "k099" not in rows
+    assert rows["k050"] == -50 and rows["k100"] == 100 and rows["k002"] == 2
+    # a key deleted and upserted in the same batch: delete-then-insert
+    both = changes.filter(F.col("key") == "k050").unionByName(
+        spark.createDataFrame(
+            [("k050", 7, "insert")], "key string, val int, _change string"
+        )
+    ).withColumn(
+        "_change",
+        F.when(F.col("val") == -50, "delete").otherwise(F.col("_change")),
+    )
+    merge_keyed(spark, path, both)
+    assert read_keyed(spark, path).filter("key = 'k050'").collect()[0]["val"] == 7
+
+
+def test_delete_keeps_seq_and_schema(spark, tmp_path, plane):
+    """A delete is the merge without upserts: it commits one version
+    but leaves ``next_seq`` and the manifest schema as they were, even
+    when its key batch carries a wider type than the table's key."""
+    from cascading_hbase_spark.keyed import table as kt
+
+    path = str(tmp_path / "kt")
+    write_keyed(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(20)], "key int, val string"
+        ),
+        path, "key", n_buckets=2,
+    )
+    write_keyed(
+        spark.createDataFrame([(5, "five")], "key int, val string"),
+        path, "key",
+    )
+    before = kt._load_meta(path)
+    delete_keyed(
+        spark, path, spark.createDataFrame([(3,), (15,), (99,)], "key bigint")
+    )
+    after = kt._load_meta(path)
+    assert after["next_seq"] == before["next_seq"]
+    assert after["schema"] == before["schema"]
+    assert after["version"] == before["version"] + 1
+    keys = sorted(r["key"] for r in read_keyed(spark, path).collect())
+    assert keys == [i for i in range(20) if i not in (3, 15)]
+
+
+@localfs_plane_only
+def test_merge_bad_seq_col_fails_before_legacy_migration(spark, tmp_path):
+    """``merge_keyed`` checks ``seq_col`` before it touches the
+    manifest: a bad name leaves a legacy table unmigrated."""
+    import json
+
+    import pyspark.sql.functions as F
+
+    from cascading_hbase_spark.keyed.table import merge_keyed
+
+    path = str(tmp_path / "legacy")
+    df = spark.createDataFrame([("a", 1), ("z", 3)], "key string, val int")
+    write_keyed(df, path, "key", n_buckets=2)
+    _flatten_to_legacy(path)
+    changes = df.withColumn("_change", F.lit("update"))
+    for bad in ("nope", "key", "_change"):
+        with pytest.raises(ValueError, match="seq_col"):
+            merge_keyed(spark, path, changes, seq_col=bad)
+    with open(os.path.join(path, "_kt_meta.json")) as f:
+        assert "gens" not in json.load(f)
