@@ -69,13 +69,13 @@ from __future__ import annotations
 
 import contextlib
 import enum
-import functools
 import json
 import math
 import os
 import uuid
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
@@ -154,17 +154,16 @@ def _load_history(path: str, version: int) -> dict | None:
         return None
 
 
-def _write_history(path: str, meta: dict) -> None:
+def _write_history(path: str, meta: dict, live_sps: dict) -> None:
     """Snapshot the just-committed manifest into the commit log and
     prune entries beyond HISTORY_KEEP (the JSONs are tiny, but the log
     must not grow unboundedly over thousands of appends).  Manifests a
-    LIVE savepoint covers are never pruned — the restore needs exactly
-    that snapshot's pointers (r13; expired savepoints stop pinning)."""
+    LIVE savepoint (``live_sps``) covers are never pruned — the restore
+    needs exactly that snapshot's pointers (r13; expired savepoints stop
+    pinning)."""
     version = meta["version"]
     _cp().write_json_atomic(_history_path(path, version), meta)
-    pinned = {
-        e.get("version") for e in _live_savepoints(path).values()
-    }
+    pinned = {e.get("version") for e in live_sps.values()}
     for v in list_generations(path):
         if v <= version - HISTORY_KEEP and v not in pinned:
             _cp().delete_quiet(_history_path(path, v))
@@ -212,18 +211,23 @@ def _save_savepoints(path: str, sps: dict) -> None:
         _cp().delete_quiet(key)
 
 
-def _live_savepoints(path: str, now: float | None = None) -> dict:
-    """Unexpired registered savepoints.  Expiry is evaluated at READ
-    time (an expired entry stops pinning immediately); the stale bytes
-    are physically dropped by the next locked writer (``_gc_orphans``
-    / ``vacuum_keyed``)."""
+def _unexpired(sps: dict) -> dict:
+    """The entries of a loaded savepoint registry that have not expired.
+    Expiry is evaluated at READ time (an expired entry stops pinning
+    immediately); the stale bytes are physically dropped by the next
+    locked writer (``_commit_meta`` / ``vacuum_keyed``)."""
     import time as _time
 
-    now = _time.time() if now is None else now
+    now = _time.time()
     return {
-        i: e for i, e in _load_savepoints(path).items()
+        i: e for i, e in sps.items()
         if e.get("expires_at") is None or e["expires_at"] > now
     }
+
+
+def _live_savepoints(path: str) -> dict:
+    """Unexpired registered savepoints of the table at ``path``."""
+    return _unexpired(_load_savepoints(path))
 
 
 def register_savepoint(
@@ -342,9 +346,16 @@ def _bucket_of(value, boundaries: list) -> int:
 # ---------------------------------------------------------------------------
 
 def _lww(df: DataFrame, key: str, order_cols: list) -> DataFrame:
-    """Collapse to one row per key: the highest (order_cols) wins."""
-    w = Window.partitionBy(key).orderBy(*[c.desc() for c in order_cols])
-    return df.withColumn("_kt_rn", F.row_number().over(w)).filter(
+    """Collapse to one row per key: the highest (order_cols) wins.
+
+    ``df`` carries ``BUCKET_COL``.  The window runs over a hash
+    partitioning on it, which is the writer's layout too
+    (``_bucket_sorted``), so the planner drops the writer's repartition:
+    last-write-wins and the write share one shuffle."""
+    w = Window.partitionBy(BUCKET_COL, key).orderBy(
+        *[c.desc() for c in order_cols]
+    )
+    return _bucket_hashed(df).withColumn("_kt_rn", F.row_number().over(w)).filter(
         F.col("_kt_rn") == 1
     ).drop("_kt_rn")
 
@@ -379,35 +390,33 @@ def _check_seq_col(seq_col: str | None, key: str, columns: list[str]) -> None:
 
 def _order_cols(df_cols: list[str], key: str, seq_col: str | None) -> list:
     intra = [F.col(seq_col)] if seq_col else [
-        F.col(c) for c in df_cols if c != key and c != SEQ_COL
+        F.col(c) for c in df_cols if c not in (key, SEQ_COL, BUCKET_COL)
     ]
     return [F.col(SEQ_COL), *intra]
 
 
-def _write_partitioned(df: DataFrame, path: str, key: str,
-                       by_bucket: bool = False) -> None:
-    """Write bucket-partitioned, each bucket's files sorted by key (so
-    the key predicate prunes row groups on read).
-
-    ``by_bucket=True`` (compaction) hash-partitions on the bucket id so
-    each bucket lands in ~one task -> ~one file; the default range
-    partitioning on the key suits incremental merges (bucket contents
-    align with contiguous key ranges)."""
-    out = _bucket_sorted(df, key, by_bucket)
+def _write_partitioned(df: DataFrame, path: str, key: str) -> None:
+    """Write bucket-partitioned, one file per bucket, sorted by key (so
+    the key predicate prunes row groups on read)."""
+    out = _bucket_sorted(df, key)
     out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
 
 
-def _bucket_sorted(df: DataFrame, key: str, by_bucket: bool) -> DataFrame:
+def _bucket_hashed(df: DataFrame) -> DataFrame:
+    """Hash-partition on the bucket id: every bucket lands in exactly
+    one task, so the write produces one file per bucket, as an HBase
+    memstore flush writes one store file per region."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, F.col(BUCKET_COL))
+
+
+def _bucket_sorted(df: DataFrame, key: str) -> DataFrame:
     """The one place the bucket-partitioned write layout is encoded
     (shared by the staged and the direct-commit writers, so the
-    "each bucket lands in ~one task -> ~one file" invariant cannot
-    silently diverge between them)."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if by_bucket:
-        return df.repartition(n, F.col(BUCKET_COL)).sortWithinPartitions(
-            BUCKET_COL, key
-        )
-    return df.repartitionByRange(n, F.col(key)).sortWithinPartitions(key)
+    one-file-per-bucket invariant cannot diverge between them).  A
+    frame ``_lww`` already partitioned the same way is not shuffled
+    again: the planner removes a repartition its input satisfies."""
+    return _bucket_hashed(df).sortWithinPartitions(BUCKET_COL, key)
 
 
 def _stage_dir(path: str) -> str:
@@ -416,7 +425,7 @@ def _stage_dir(path: str) -> str:
     return path.rstrip("/") + "__kt_stage"
 
 
-def _gc_orphans(path: str, meta: dict) -> None:
+def _gc_orphans(path: str, meta: dict, live_sps: dict) -> None:
     """Remove generation directories no retained manifest references.
 
     Retained = the generation pointers of the last ``retain`` (default
@@ -441,16 +450,9 @@ def _gc_orphans(path: str, meta: dict) -> None:
         h = _load_history(path, v)
         if h:
             _add(h.get("gens", {}))
-    # LIVE registered savepoints pin their snapshot's generations past
-    # the retain window (r13): the per-commit GC must never collect a
-    # snapshot a cross-table restore still depends on.  Expired
-    # registry entries are dropped here (this runs under the writer
-    # lock on every commit) — that is how an expired savepoint's
-    # storage is actually reclaimed.
-    all_sps = _load_savepoints(path)
-    live_sps = _live_savepoints(path)
-    if len(live_sps) != len(all_sps):
-        _save_savepoints(path, live_sps)
+    # LIVE registered savepoints (``live_sps``) pin their snapshot's
+    # generations past the retain window (r13): the per-commit GC must
+    # never collect a snapshot a cross-table restore still depends on.
     for ent in live_sps.values():
         v = ent.get("version")
         if v and v < version:
@@ -544,8 +546,15 @@ def _commit_meta(path: str, meta: dict) -> None:
     ``_migrate_legacy`` records), so its next commit is v2."""
     meta["version"] = meta.get("version", 1) + 1
     _save_meta(path, meta)  # <- the commit point
-    _write_history(path, meta)
-    _gc_orphans(path, meta)
+    # One registry read per commit.  Expired entries are dropped here,
+    # under the writer lock — that is how an expired savepoint's
+    # storage is actually reclaimed.
+    all_sps = _load_savepoints(path)
+    live_sps = _unexpired(all_sps)
+    if len(live_sps) != len(all_sps):
+        _save_savepoints(path, live_sps)
+    _write_history(path, meta, live_sps)
+    _gc_orphans(path, meta, live_sps)
 
 
 def _migrate_legacy(path: str, meta: dict) -> None:
@@ -571,7 +580,7 @@ def _migrate_legacy(path: str, meta: dict) -> None:
     meta["last_gen"] = dict(gens)
     meta.setdefault("version", 1)
     _save_meta(path, meta)
-    _write_history(path, meta)
+    _write_history(path, meta, _live_savepoints(path))
 
 
 def _update_zone_maps(df: DataFrame, meta: dict) -> None:
@@ -614,7 +623,6 @@ def _update_zone_maps(df: DataFrame, meta: dict) -> None:
 
 def _stage_and_publish(
     df: DataFrame, path: str, key: str, meta: dict, affected: list | None = None,
-    by_bucket: bool = False,
 ) -> None:
     """Materialize ``df`` bucket-partitioned in the staging sibling,
     then commit via ``_publish``.  ``affected=None`` publishes every
@@ -633,13 +641,13 @@ def _stage_and_publish(
     DIRECTLY at their final generation keys and only the manifest flip
     makes them visible."""
     if getattr(_cp(), "direct_commit", False):
-        _direct_publish(df, path, key, meta, affected, by_bucket)
+        _direct_publish(df, path, key, meta, affected)
         return
     stage = _stage_dir(path)
     _cp().delete_tree_quiet(stage)
     _update_zone_maps(df, meta)
     try:
-        _write_partitioned(df, stage, key, by_bucket=by_bucket)
+        _write_partitioned(df, stage, key)
         staged = {
             int(d.split("=", 1)[1])
             for d in _cp().list_names(stage)
@@ -651,8 +659,7 @@ def _stage_and_publish(
 
 
 def _direct_publish(
-    df: DataFrame, path: str, key: str, meta: dict, affected: list | None,
-    by_bucket: bool = False,
+    df: DataFrame, path: str, key: str, meta: dict, affected: list | None
 ) -> None:
     """Rename-free commit (object-store pattern): write each bucket's
     files DIRECTLY into its next generation directory — readers resolve
@@ -666,7 +673,7 @@ def _direct_publish(
     The next generation per bucket must be known BEFORE Spark runs, so
     it is precomputed for every possible bucket id (the bucket count is
     fixed at creation — bounded, driver-side arithmetic only) and
-    attached as a literal-array lookup ``gen = gens_by_bucket[bucket]``
+    attached as a literal-array lookup ``gen = gen_of_bucket[bucket]``
     — no extra shuffle, no second pass over the data.
 
     Control-plane traffic tracks the TOUCHED buckets, not the bucket
@@ -705,9 +712,7 @@ def _direct_publish(
     )
     obs = Observation()
     out = _bucket_sorted(
-        out.observe(obs, F.collect_set(F.col(BUCKET_COL)).alias("buckets")),
-        key,
-        by_bucket,
+        out.observe(obs, F.collect_set(F.col(BUCKET_COL)).alias("buckets")), key
     )
     out.write.mode("append").partitionBy(BUCKET_COL, GEN_COL).parquet(path)
     try:
@@ -958,8 +963,12 @@ def write_keyed(
                 c: fam.get(c, "cf") for c in df.columns if c not in (key, SEQ_COL)
             }
             batch = _lww(
-                df.withColumn(SEQ_COL, F.lit(0)), key, _order_cols(df.columns, key, seq_col)
-            ).withColumn(BUCKET_COL, _bucket_expr(key, boundaries))
+                df.withColumn(SEQ_COL, F.lit(0)).withColumn(
+                    BUCKET_COL, _bucket_expr(key, boundaries)
+                ),
+                key,
+                _order_cols(df.columns, key, seq_col),
+            )
             if zone_cols:
                 # pin the batch: the zone-map stats and the staged write
                 # are two actions — a non-deterministic input plan
@@ -1019,13 +1028,32 @@ def write_keyed(
                 f"zone_cols are fixed at table creation "
                 f"(table: {meta.get('zone_cols', [])}, got: {list(zone_cols)})"
             )
-        # Pin the batch (the delta, not the table): the bucket collect
-        # and the staged write must see the SAME rows even if the input
-        # plan is non-deterministic, and the upstream plan runs once.
-        _merge(
-            spark, path, meta, df.localCheckpoint(eager=True), None,
-            seq_col, meta_extra,
-        )
+        batch, affected = _pin(df, meta)
+        _merge(spark, path, meta, batch, None, affected, seq_col, meta_extra)
+
+
+def _pin(df: DataFrame, meta: dict) -> tuple[DataFrame, list[int]]:
+    """Pin a merge batch (the delta, not the table) with its bucket
+    column, and find the buckets it touches in the same job.
+
+    The pin is an eager ``localCheckpoint``: the merge's read, anti-join
+    and write see the SAME rows even if the input plan is
+    non-deterministic, and the upstream plan runs once.  The affected
+    buckets ride that job as an ``Observation``.  On a plan the
+    optimizer proves empty, the observation can be dropped (see
+    ``_direct_publish``); only then are the buckets collected from the
+    pinned rows."""
+    obs = Observation()
+    pinned = (
+        df.withColumn(BUCKET_COL, _bucket_expr(meta["key"], meta["boundaries"]))
+        .observe(obs, F.collect_set(F.col(BUCKET_COL)).alias("buckets"))
+        .localCheckpoint(eager=True)
+    )
+    try:
+        buckets = obs.get["buckets"]
+    except Py4JJavaError:  # no metrics row: the observation was dropped
+        buckets = [r[0] for r in pinned.select(BUCKET_COL).distinct().collect()]
+    return pinned, sorted(buckets)
 
 
 def _merge(
@@ -1034,25 +1062,28 @@ def _merge(
     meta: dict,
     upserts: DataFrame | None,
     deletes: DataFrame | None,
+    affected: list[int],
     seq_col: str | None,
     meta_extra: dict | None,
 ) -> None:
     """The one bucket-merge commit behind APPEND, delete and MERGE, as
     the reference sends Puts and Deletes through one record writer
     (TableOutputFormatWrap.java:79-84).  Runs under the caller's writer
-    lock on pinned inputs; either side may be None.  A legacy flat
-    layout is migrated first.
+    lock on inputs pinned by ``_pin``, which also found ``affected``,
+    the buckets either side touches; either side may be None.  A
+    legacy flat layout is migrated first.
 
-    Only the buckets either side touches are read and rewritten: the
-    ``deletes`` keys are anti-joined out, then the ``upserts`` rows win
+    Only the affected buckets are read and rewritten: the ``deletes``
+    keys are anti-joined out, then the ``upserts`` rows win
     last-write-wins (a key both deleted and upserted resolves
     delete-then-insert), and one manifest flip publishes the result.
-    Only the upsert side evolves the schema, bumps ``next_seq`` and
-    registers ``seq_col``."""
+    The last-write-wins window and the write share one shuffle on the
+    bucket id, so each touched bucket gets one new file.  Only the
+    upsert side evolves the schema, bumps ``next_seq`` and registers
+    ``seq_col``."""
     _migrate_legacy(path, meta)
-    key, boundaries = meta["key"], meta["boundaries"]
+    key = meta["key"]
     _backfill_schema(spark, path, meta, upserts)
-    touched = []
     if upserts is not None:
         order = _order_cols(upserts.columns, key, seq_col)
         # Additive schema evolution (a new column is a new HBase
@@ -1080,19 +1111,10 @@ def _merge(
             meta["seq_col"] = seq_col
         elif seq_col == "":
             meta.pop("seq_col", None)
-        upserts = upserts.withColumn(SEQ_COL, F.lit(seq)).withColumn(
-            BUCKET_COL, _bucket_expr(key, boundaries)
-        )
-        touched.append(upserts.select(BUCKET_COL))
-    if deletes is not None:
-        touched.append(deletes.select(_bucket_expr(key, boundaries)))
-    # one job collects the buckets of both sides
-    affected = sorted(
-        r[0] for r in functools.reduce(DataFrame.union, touched).distinct().collect()
-    )
+        upserts = upserts.withColumn(SEQ_COL, F.lit(seq))
     merged = _read_raw(spark, path, meta, buckets=set(affected))
     if deletes is not None:
-        merged = merged.join(deletes, key, "left_anti")
+        merged = merged.join(deletes.select(key), key, "left_anti")
     if upserts is not None:
         merged = _lww(
             merged.unionByName(upserts, allowMissingColumns=True), key, order
@@ -1119,7 +1141,7 @@ def _backfill_schema(
         live = _read_raw(spark, path, meta).drop(SEQ_COL, BUCKET_COL)
         meta["schema"] = live.schema.json()
     elif batch is not None:
-        meta["schema"] = batch.schema.json()
+        meta["schema"] = batch.drop(BUCKET_COL).schema.json()
 
 
 def _record_written_types(meta: dict, merged: DataFrame) -> None:
@@ -1410,11 +1432,10 @@ def delete_keyed(spark: SparkSession, path: str, keys: DataFrame) -> None:
     with _writer_lock(path):
         meta = _load_meta(path)
         # Pin the key set: a non-deterministic keys plan must yield the
-        # SAME keys to the bucket collect and the anti-join, or a key
+        # SAME keys to the affected buckets and the anti-join, or a key
         # could route to a bucket never rewritten and silently survive.
-        key = meta["key"]
-        keys = keys.toDF(key).select(key).localCheckpoint(eager=True)
-        _merge(spark, path, meta, None, keys, None, None)
+        keys, affected = _pin(keys.toDF(meta["key"]), meta)
+        _merge(spark, path, meta, None, keys, affected, None, None)
 
 
 def table_version(path: str) -> int:
@@ -1449,7 +1470,8 @@ def merge_keyed(
     batch's row survives.  Additive schema evolution applies like
     APPEND.  Both sides go through the one bucket merge that APPEND
     and ``delete_keyed`` use: the buckets touched by EITHER side are
-    collected in one job and rewritten; the manifest flips once.
+    found in the job that pins the batch and rewritten, one file per
+    bucket; the manifest flips once.
 
     ``expected_version`` (from ``table_version``) enables optimistic
     concurrency for read-modify-write cycles: the merge commits only
@@ -1474,15 +1496,15 @@ def merge_keyed(
         _check_seq_col(
             seq_col, key, [c for c in changes.columns if c != change_col]
         )
-        # Pin the batch once: the split, the affected-bucket collect and
-        # the staged write must all see the same rows.
-        changes = changes.localCheckpoint(eager=True)
+        # Pin the batch once, before the split: both sides and the
+        # affected buckets must all see the same rows.
+        changes, affected = _pin(changes, meta)
         is_del = F.col(change_col) == "delete"
         _merge(
             spark, path, meta,
             changes.filter(~is_del).drop(change_col),
-            changes.filter(is_del).select(key),
-            seq_col, meta_extra,
+            changes.filter(is_del),
+            affected, seq_col, meta_extra,
         )
 
 
@@ -1525,9 +1547,9 @@ def compact_keyed(
     compacted regions behind the scenes).
 
     Major (default): every live bucket rewrites —
-    - coalesces the per-bucket file count back to ~1 file per bucket
-      (appends leave range-partitioned merge output: several files per
-      touched bucket per generation);
+    - writes each bucket as one file again (every commit already writes
+      one file per touched bucket, but a bucket can hold several: a
+      legacy layout, or a write under ``spark.sql.files.maxRecordsPerFile``);
     - with ``n_buckets``, RE-SAMPLES the range boundaries from the
       current keys and re-buckets the whole table — the answer to
       key-distribution drift after the creation-time boundaries went
@@ -1562,9 +1584,7 @@ def compact_keyed(
             if meta.get("ttl"):
                 # purge TTL'd rows from the buckets being rewritten
                 current = _ttl_filter(current, meta["ttl"])
-            _stage_and_publish(
-                current, path, key, meta, sorted(fragmented), by_bucket=True
-            )
+            _stage_and_publish(current, path, key, meta, sorted(fragmented))
             return
         current = _read_raw(spark, path, meta).drop(BUCKET_COL)
         if meta.get("ttl"):
@@ -1599,7 +1619,7 @@ def compact_keyed(
             {int(b) for b in meta.get("gens", {})}
             | set(range(len(meta["boundaries"]) + 1))
         )
-        _stage_and_publish(batch, path, key, meta, affected, by_bucket=True)
+        _stage_and_publish(batch, path, key, meta, affected)
 
 
 def rollback_keyed(path: str, generation: int) -> None:
@@ -2093,7 +2113,7 @@ def vacuum_keyed(path: str, retain: int = 1, force: bool = False) -> None:
     with _writer_lock(path):
         meta = _load_meta(path)
         all_sps = _load_savepoints(path)
-        live_sps = _live_savepoints(path)
+        live_sps = _unexpired(all_sps)
         req_horizon = meta.get("version", 1) - retain + 1
         crossed = {
             i: e for i, e in live_sps.items()
@@ -2122,4 +2142,4 @@ def vacuum_keyed(path: str, retain: int = 1, force: bool = False) -> None:
             _save_meta(path, meta)
         once = dict(meta)
         once["retain"] = retain
-        _gc_orphans(path, once)
+        _gc_orphans(path, once, kept)

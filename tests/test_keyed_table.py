@@ -816,15 +816,21 @@ def test_minor_compaction_rewrites_only_fragmented_buckets(spark, tmp_path):
             out[b] = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
         return out
 
-    # fragment ONE bucket: a multi-key append entirely in the low range
-    write_keyed(
-        spark.createDataFrame(
-            [(i, 999) for i in range(8)], "k bigint, v bigint"
-        ),
-        path,
-        "k",
-        mode=SinkMode.APPEND,
-    )
+    # fragment ONE bucket: a multi-key append entirely in the low range,
+    # written at two records per file (a commit writes one file per
+    # touched bucket unless the session caps the records per file)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
+    try:
+        write_keyed(
+            spark.createDataFrame(
+                [(i, 999) for i in range(8)], "k bigint, v bigint"
+            ),
+            path,
+            "k",
+            mode=SinkMode.APPEND,
+        )
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     frag = {b for b, n in files_per_bucket().items() if n > 1}
     assert frag, "append should have fragmented at least one bucket"
     before_rows = {tuple(r) for r in read_keyed(spark, path).collect()}
@@ -2590,11 +2596,14 @@ def _collect_sites(spark, action) -> set[str]:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
-    names = [
-        tracker.getStageInfo(s).name
+    # a skipped stage (its shuffle output reused, no task run) has no
+    # StageInfo
+    infos = [
+        tracker.getStageInfo(s)
         for j in tracker.getJobIdsForGroup(group)
         for s in tracker.getJobInfo(j).stageIds
     ]
+    names = [i.name for i in infos if i is not None]
     return {
         n for n in names
         if n.startswith("collect at ")
@@ -2602,9 +2611,10 @@ def _collect_sites(spark, action) -> set[str]:
     }
 
 
-def test_merge_collects_affected_buckets_once(spark, tmp_path, plane):
+def test_merge_finds_affected_buckets_without_collect(spark, tmp_path, plane):
     """A MERGE with both upserts and deletes finds the buckets of both
-    sides in one collect, and applies delete-then-insert."""
+    sides in the job that pins the batch, with no collect of its own,
+    and applies delete-then-insert."""
     import pyspark.sql.functions as F
 
     from cascading_hbase_spark.keyed.table import merge_keyed
@@ -2622,7 +2632,7 @@ def test_merge_collects_affected_buckets_once(spark, tmp_path, plane):
         "key string, val int, _change string",
     )
     sites = _collect_sites(spark, lambda: merge_keyed(spark, path, changes))
-    assert len(sites) == 1, sites
+    assert sites == set(), sites
     rows = {r["key"]: r["val"] for r in read_keyed(spark, path).collect()}
     assert len(rows) == 99
     assert "k001" not in rows and "k099" not in rows
@@ -2689,3 +2699,242 @@ def test_merge_bad_seq_col_fails_before_legacy_migration(spark, tmp_path):
             merge_keyed(spark, path, changes, seq_col=bad)
     with open(os.path.join(path, "_kt_meta.json")) as f:
         assert "gens" not in json.load(f)
+
+
+# ---------------------------------------------------------------------------
+# One shuffle and one file per touched bucket
+# ---------------------------------------------------------------------------
+
+def _live_files_per_bucket(path) -> dict[str, int]:
+    """Parquet files in each bucket's CURRENT generation, through the
+    control plane's manifest (data files are on the local FS)."""
+    from cascading_hbase_spark.keyed.controlplane import get_control_plane
+
+    meta = get_control_plane().read_json(os.path.join(path, "_kt_meta.json"))
+    out = {}
+    for b, g in meta["gens"].items():
+        d = os.path.join(path, f"_kt_bucket={b}", f"_kt_gen={g}")
+        out[b] = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+    return out
+
+
+def test_commits_write_one_file_per_touched_bucket(spark, tmp_path, plane):
+    """Creation writes one file per bucket, and an APPEND whose keys
+    fall in k buckets writes exactly k files, one into each."""
+    from cascading_hbase_spark.keyed import table as kt
+
+    path = str(tmp_path / "kt")
+    write_keyed(
+        spark.createDataFrame(
+            [(f"k{i:05d}", i) for i in range(10000)], "key string, val int"
+        ),
+        path, "key", n_buckets=8,
+    )
+    created = _live_files_per_bucket(path)
+    assert len(created) == 8 and set(created.values()) == {1}, created
+    meta = kt._load_meta(path)
+    # two keys at the low end, three at the high end: 2 buckets
+    keys = ["k00000", "k00001", "k09997", "k09998", "k09999"]
+    touched = {str(kt._bucket_of(k, meta["boundaries"])) for k in keys}
+    assert len(touched) == 2
+    write_keyed(
+        spark.createDataFrame([(k, -1) for k in keys], "key string, val int"),
+        path, "key",
+    )
+    gens = kt._load_meta(path)["gens"]
+    rewritten = {b for b in gens if gens[b] != meta["gens"][b]}
+    assert rewritten == touched
+    after = _live_files_per_bucket(path)
+    assert sum(after[b] for b in rewritten) == len(touched), after
+    rows = {r["key"]: r["val"] for r in read_keyed(spark, path).collect()}
+    assert len(rows) == 10000 and all(rows[k] == -1 for k in keys)
+
+
+def test_merge_plan_has_one_exchange(spark, tmp_path, plane):
+    """The last-write-wins window and the write share one hash
+    shuffle on the bucket id: the written plan of an APPEND holds
+    exactly one Exchange and no range partitioning."""
+    from cascading_hbase_spark.keyed import table as kt
+
+    path = str(tmp_path / "kt")
+    write_keyed(
+        spark.createDataFrame(
+            [(i, i % 7, float(i)) for i in range(2000)], "k long, g int, v double"
+        ),
+        path, "k", n_buckets=4, seq_col="g",
+    )
+    plans = []
+    real = kt._bucket_sorted
+
+    def capture(df, key, *rest):
+        out = real(df, key, *rest)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    kt._bucket_sorted = capture
+    try:
+        write_keyed(
+            spark.createDataFrame(
+                [(i, 9, -1.0) for i in range(100, 105)], "k long, g int, v double"
+            ),
+            path, "k", seq_col="g",
+        )
+    finally:
+        kt._bucket_sorted = real
+    assert len(plans) == 1
+    assert plans[0].count("Exchange") == 1, plans[0]
+    assert "rangepartitioning" not in plans[0]
+    rows = {r["k"]: r["v"] for r in read_keyed(spark, path).collect()}
+    assert len(rows) == 2000 and rows[102] == -1.0 and rows[99] == 99.0
+
+
+def test_hot_key_append_job_budget(spark, tmp_path, plane):
+    """A hot-key APPEND into a zone-mapped table runs at most 5 Spark
+    jobs: the batch pin (which also finds the affected buckets), the
+    zone-map aggregate and the write.  Its only collect in
+    ``keyed/table.py`` is the zone-map aggregate's."""
+    import inspect
+
+    from cascading_hbase_spark.keyed import table as kt
+
+    path = str(tmp_path / "kt")
+    write_keyed(
+        spark.createDataFrame(
+            [(i, i % 7, float(i)) for i in range(2000)], "k long, g int, v double"
+        ),
+        path, "k", n_buckets=8, seq_col="g", zone_cols=["v"],
+    )
+    src, first = inspect.getsourcelines(kt._update_zone_maps)
+    zone_site = next(
+        f"table.py:{first + i}" for i, line in enumerate(src) if ".collect()" in line
+    )
+
+    def hot():
+        return spark.createDataFrame(
+            [(i, 9, -1.0) for i in range(500, 505)], "k long, g int, v double"
+        )
+
+    assert _jobs_run(spark, lambda: write_keyed(hot(), path, "k", seq_col="g")) <= 5
+    sites = _collect_sites(spark, lambda: write_keyed(hot(), path, "k", seq_col="g"))
+    assert all(s.endswith(zone_site) for s in sites), (sites, zone_site)
+    zm = kt._load_meta(path)["zone_maps"]
+    assert min(lo for lo, _hi in (e["v"] for e in zm.values())) < -0.99
+
+
+def test_pin_falls_back_when_observation_is_dropped(spark, tmp_path, monkeypatch):
+    """If the optimizer drops the pin's observation, the affected
+    buckets are collected from the pinned rows instead."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Observation
+
+    from cascading_hbase_spark.keyed import table as kt
+
+    class Dropped(Observation):
+        @property
+        def get(self):
+            # what ``get`` raises once the optimizer removed the
+            # observed node: filtering above it proves the plan empty
+            lost = Observation()
+            spark.range(1).observe(lost, F.count(F.lit(1))).filter(
+                F.lit(False)
+            ).collect()
+            return lost.get
+
+    path = str(tmp_path / "kt")
+    write_keyed(
+        spark.createDataFrame([(i, i) for i in range(100)], "k long, v long"),
+        path, "k", n_buckets=4,
+    )
+    monkeypatch.setattr(kt, "Observation", Dropped)
+    batch = spark.createDataFrame([(1, -1), (98, -98)], "k long, v long")
+    pinned, affected = kt._pin(batch, kt._load_meta(path))
+    meta = kt._load_meta(path)
+    assert affected == sorted({kt._bucket_of(k, meta["boundaries"]) for k in (1, 98)})
+    assert pinned.count() == 2
+    write_keyed(batch, path, "k")
+    rows = {r["k"]: r["v"] for r in read_keyed(spark, path).collect()}
+    assert rows[1] == -1 and rows[98] == -98 and len(rows) == 100
+
+
+def test_empty_batches_commit(spark, tmp_path, plane):
+    """An APPEND of an empty frame, a delete of no keys and an
+    index-silent ``refresh_index`` each commit one version and change
+    no row."""
+    from cascading_hbase_spark.keyed.index import (
+        _index_path, create_index, index_lookup, refresh_index,
+    )
+    from cascading_hbase_spark.keyed.table import table_version
+
+    path = str(tmp_path / "kt")
+    df = spark.createDataFrame(
+        [(i, "red" if i % 2 else "blue", i) for i in range(40)],
+        "key long, color string, v long",
+    )
+    write_keyed(df, path, "key", n_buckets=4, retain=10)
+    before = sorted(map(tuple, read_keyed(spark, path).collect()))
+    v = table_version(path)
+    write_keyed(spark.createDataFrame([], df.schema), path, "key")
+    assert table_version(path) == v + 1
+    delete_keyed(spark, path, spark.createDataFrame([], "key long"))
+    assert table_version(path) == v + 2
+    assert sorted(map(tuple, read_keyed(spark, path).collect())) == before
+
+    create_index(spark, path, "color")
+    ipath = _index_path(path, "color")
+    iv = table_version(ipath)
+    # moves only the non-indexed column: the index delta is empty
+    write_keyed(
+        spark.createDataFrame([(3, "red", 300)], "key long, color string, v long"),
+        path, "key",
+    )
+    refresh_index(spark, path, "color")
+    assert table_version(ipath) == iv + 1
+    hits = sorted(r["key"] for r in index_lookup(spark, path, "color", "red").collect())
+    assert hits == [i for i in range(40) if i % 2]
+
+
+def test_commit_reads_savepoint_registry_once(spark, tmp_path):
+    """Every commit reads the savepoint registry once, and still drops
+    expired entries under the writer lock."""
+    import time
+
+    from cascading_hbase_spark.keyed import table as kt
+    from cascading_hbase_spark.keyed.controlplane import (
+        LocalFSControlPlane,
+        use_control_plane,
+    )
+
+    class Recording(LocalFSControlPlane):
+        def __init__(self):
+            self.reads = []
+
+        def read_json(self, key):
+            self.reads.append(key)
+            return super().read_json(key)
+
+    path = str(tmp_path / "kt")
+    write_keyed(
+        spark.createDataFrame([(i, i) for i in range(40)], "k long, v long"),
+        path, "k", n_buckets=2, retain=10,
+    )
+    with kt._writer_lock(path):
+        kt.register_savepoint(path, "live", kt.table_version(path))
+        kt.register_savepoint(path, "dead", 1, expires_at=time.time() - 1.0)
+    plane = Recording()
+
+    def registry_reads(commit) -> int:
+        plane.reads.clear()
+        v = kt.table_version(path)
+        with use_control_plane(plane):
+            commit()
+        assert kt.table_version(path) == v + 1
+        return sum(k.endswith(kt.SAVEPOINTS_FILE) for k in plane.reads)
+
+    one_row = spark.createDataFrame([(5, -5)], "k long, v long")
+    assert registry_reads(lambda: write_keyed(one_row, path, "k")) == 1
+    assert set(kt._load_savepoints(path)) == {"live"}
+    assert registry_reads(
+        lambda: delete_keyed(spark, path, spark.createDataFrame([(6,)], "k long"))
+    ) == 1
+    assert registry_reads(lambda: kt.set_ttl(path, "v", None)) == 1
+    assert registry_reads(lambda: kt.compact_keyed(spark, path)) == 1
