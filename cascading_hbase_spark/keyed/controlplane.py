@@ -4,7 +4,7 @@ The keyed layer's DATA plane is already object-store-portable (buckets
 are plain parquet directories written/read through Spark, so a table
 ``path`` can be ``s3a://...`` for every scan/merge the engine plans).
 The CONTROL plane — manifest commits, the commit-history log, writer
-mutual exclusion, stage promotion, listing and GC — was a set of POSIX
+mutual exclusion, listing and GC — was a set of POSIX
 calls spread through ``keyed/table.py``.  This module is the seam those
 calls now go through: a small abstract interface with the local-
 filesystem implementation as the default, so a cloud port swaps ONE
@@ -27,12 +27,12 @@ note this module supersedes; see also ``API.md``):
 - listing-as-truth            -> plan from the manifest's generation
   pointers, never LIST (also dodges eventual-consistency stragglers);
   GC by manifest diff (batch-delete of keys no retained manifest
-  references);
-- stage-directory promotion   -> write data files DIRECTLY at their
-  final generation keys: they are invisible until the manifest
-  references them, the manifest IS the commit point, so the
-  rename-free pattern needs no extra machinery (``promote_dir``
-  becomes a no-op there).
+  references).
+
+Data files need no control-plane call to commit on any plane: the
+engine writes them DIRECTLY at their final generation keys, where they
+stay invisible until the manifest references them — the manifest flip
+IS the commit point, so nothing is ever staged or renamed.
 
 Single-process injection model: the control plane is driver-side state
 (``keyed/table.py`` runs its control flow on the driver; executors
@@ -139,20 +139,11 @@ class ControlPlane(ABC):
     @abstractmethod
     def delete_tree_quiet(self, prefix: str) -> None:
         """Recursive delete of everything under ``prefix`` (generation
-        GC, REPLACE, stage cleanup); absent prefixes are not an error.
-        Object-store port: batch-delete of the keys the retained
+        GC, REPLACE, crashed-write cleanup); absent prefixes are not an
+        error.  Object-store port: batch-delete of the keys the retained
         manifests no longer reference — computable from the manifest
         diff, no LIST required (the generation layout guarantees a
         dropped generation's keys share its prefix)."""
-
-    @abstractmethod
-    def promote_dir(self, src: str, dst: str) -> None:
-        """Move a staged bucket directory to its final generation key
-        (crashes before the manifest flip leave only unreferenced
-        orphans).  Object-store port: a NO-OP — write data files
-        directly at their final generation keys; they are invisible
-        until the manifest references them, so staging needs no
-        second location and nothing ever renames."""
 
     @abstractmethod
     def move_object(self, src: str, dst: str) -> None:
@@ -250,10 +241,6 @@ class LocalFSControlPlane(ControlPlane):
 
     def delete_tree_quiet(self, prefix: str) -> None:
         shutil.rmtree(prefix, ignore_errors=True)
-
-    def promote_dir(self, src: str, dst: str) -> None:
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.replace(src, dst)
 
     def move_object(self, src: str, dst: str) -> None:
         os.replace(src, dst)

@@ -2,7 +2,7 @@
 
 ``keyed.controlplane`` defined the seam and documented, per method, how
 a cloud object store satisfies it (conditional-PUT commit, TTL lease,
-rename-free promotion).  This module implements that port against an
+manifest diff GC).  This module implements that port against an
 EMULATED store so every protocol claim is executable and race-tested —
 the remaining gap to a real deployment is swapping
 ``EmulatedObjectStore`` for an SDK client with the same five
@@ -23,14 +23,12 @@ What is REAL here, not mocked:
   reclaimed by exactly one of them (``If-Match`` on the stale lease's
   ETag), and release is a conditional DELETE so a slow old holder can
   never delete its successor's lease;
-- rename-free data commits — the plane sets ``direct_commit`` so the
-  engine writes parquet files DIRECTLY at their final generation keys
+- rename-free data commits — the engine's one write path, on every
+  plane, writes parquet files DIRECTLY at their final generation keys
   (``_kt_bucket=<b>/_kt_gen=<n>``; invisible until the manifest
-  references them) and ``promote_dir`` refuses to exist.  On S3 a
-  "rename" is a full copy + delete of every object; at 100 TB the
-  stage-then-promote pattern would copy the table once per commit —
-  this plane proves the engine needs no rename anywhere on the write
-  path.
+  references them), and this plane has no rename primitive at all.
+  On S3 a "rename" is a full copy + delete of every object; at 100 TB
+  a stage-then-promote pattern would copy the table once per commit.
 
 Hybrid by design, like a real deployment: CONTROL objects (the
 manifest, the per-commit history log, the lease) live in the store;
@@ -344,18 +342,11 @@ class ObjectStoreControlPlane(ControlPlane):
     """``ControlPlane`` over an ``EmulatedObjectStore`` — the cloud
     port of the seam, faithful to each method's documented semantics.
 
-    ``direct_commit = True`` switches the engine's data writes to the
-    rename-free pattern (files written at final generation keys; the
-    manifest flip is the only commit point), and ``promote_dir``
-    raises — under this plane nothing may ever rename.
-
     ``lease_ttl`` bounds how long a crashed writer blocks the table
     (production would heartbeat long commits; the single-writer
     deployment contract is unchanged).  ``holder`` names this driver
     in the lease document.
     """
-
-    direct_commit = True
 
     def __init__(
         self,
@@ -517,13 +508,6 @@ class ObjectStoreControlPlane(ControlPlane):
         for k in self.store.list_keys(prefix.rstrip("/") + "/"):
             self.store.delete(k)
         shutil.rmtree(prefix, ignore_errors=True)
-
-    def promote_dir(self, src: str, dst: str) -> None:
-        raise AssertionError(
-            "rename-free plane: data files are written directly at "
-            "their final generation keys (direct_commit), nothing may "
-            f"promote {src} -> {dst}"
-        )
 
     def move_object(self, src: str, dst: str) -> None:
         # server-side copy + delete — the only "move" stores have

@@ -34,13 +34,13 @@ explicit ``compact_keyed(..., n_buckets=...)`` re-samples them (the
 engine-side analogue of an HBase region split/major compaction, which
 the reference got for free from the region server,
 TableInputFormatWrap.java:40-82).  A merge rewrites *only the buckets
-its batch touches* into fresh generation directories (staged in a
-sibling and moved on the local plane, written in place on an object
-store) and COMMITS by atomically replacing the manifest — readers
-resolve data only through the manifest's generation pointers, so a
-multi-bucket merge is all-or-nothing (a crash anywhere pre-commit
-leaves the previous snapshot intact plus invisible orphans, GC'd by
-the next write).  Untouched buckets' files are never read or rewritten
+its batch touches* into fresh generation directories (written in
+place: nothing is staged or renamed) and COMMITS by atomically
+replacing the manifest — readers resolve data only through the
+manifest's generation pointers, so a multi-bucket merge is
+all-or-nothing (a crash anywhere pre-commit leaves the previous
+snapshot intact plus invisible orphans, GC'd by the next write).
+Untouched buckets' files are never read or rewritten
 (the analogue of HBase routing a Put to one region, not compacting the
 whole table).  The seq counter persists before the data write, so a
 crashed-and-replayed batch never reuses a committed seq.  Range scans
@@ -395,13 +395,6 @@ def _order_cols(df_cols: list[str], key: str, seq_col: str | None) -> list:
     return [F.col(SEQ_COL), *intra]
 
 
-def _write_partitioned(df: DataFrame, path: str, key: str) -> None:
-    """Write bucket-partitioned, one file per bucket, sorted by key (so
-    the key predicate prunes row groups on read)."""
-    out = _bucket_sorted(df, key)
-    out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-
-
 def _bucket_hashed(df: DataFrame) -> DataFrame:
     """Hash-partition on the bucket id: every bucket lands in exactly
     one task, so the write produces one file per bucket, as an HBase
@@ -411,18 +404,10 @@ def _bucket_hashed(df: DataFrame) -> DataFrame:
 
 
 def _bucket_sorted(df: DataFrame, key: str) -> DataFrame:
-    """The one place the bucket-partitioned write layout is encoded
-    (shared by the staged and the direct-commit writers, so the
-    one-file-per-bucket invariant cannot diverge between them).  A
+    """The one place the bucket-partitioned write layout is encoded.  A
     frame ``_lww`` already partitioned the same way is not shuffled
     again: the planner removes a repartition its input satisfies."""
     return _bucket_hashed(df).sortWithinPartitions(BUCKET_COL, key)
-
-
-def _stage_dir(path: str) -> str:
-    """Staging sibling OUTSIDE the table directory, so a crashed merge
-    can never pollute partition discovery on the live table."""
-    return path.rstrip("/") + "__kt_stage"
 
 
 def _gc_orphans(path: str, meta: dict, live_sps: dict) -> None:
@@ -475,41 +460,6 @@ def _gc_orphans(path: str, meta: dict, live_sps: dict) -> None:
                 _cp().delete_tree_quiet(os.path.join(full, g))
 
 
-def _publish(stage: str, path: str, meta: dict, affected: list) -> None:
-    """Transactional commit: move each staged bucket into a NEW
-    generation directory (``_kt_bucket=<b>/_kt_gen=<n>``), then flip
-    the manifest (``_kt_meta.json``) via the control plane's atomic
-    publish (``os.replace`` locally; conditional PUT on an object
-    store).
-
-    Readers resolve data through the manifest's generation pointers, so
-    the flip makes ALL affected buckets visible at once — a crash at
-    any earlier point leaves only unreferenced orphan directories (the
-    previous snapshot stays fully readable), which the next write
-    garbage-collects.  This is the engine's stand-in for the atomicity
-    the reference got from HBase for free (HBaseTap.java:44-101
-    delegates lifecycle to the region server).
-
-    Generation numbers come from the monotone ``last_gen`` map (never
-    reset, even when a bucket empties or the table rolls back), so a
-    fresh generation can never collide with a grace-retained or
-    time-travel-retained older one."""
-    gens = meta.setdefault("gens", {})
-    last = meta.setdefault("last_gen", {})
-    written: dict[str, int] = {}
-    for b in affected:
-        sb = str(b)
-        src = os.path.join(stage, f"{BUCKET_COL}={b}")
-        if _cp().dir_exists(src):
-            newgen = max(gens.get(sb, -1), last.get(sb, -1)) + 1
-            dst = os.path.join(path, f"{BUCKET_COL}={b}", f"{GEN_PREFIX}{newgen}")
-            if _cp().dir_exists(dst):  # orphan of a crashed attempt
-                _cp().delete_tree_quiet(dst)
-            _cp().promote_dir(src, dst)
-            written[sb] = newgen
-    _commit_manifest(path, meta, affected, written)
-
-
 def _commit_manifest(
     path: str, meta: dict, affected: list, written: dict[str, int]
 ) -> None:
@@ -517,8 +467,7 @@ def _commit_manifest(
     produced (``written``), drop the pointers of affected buckets the
     batch emptied (the previous manifest still references their last
     generation, so in-flight readers keep working for one commit), and
-    flip the manifest — the single commit point for stage-and-promote
-    and direct-to-final writes alike."""
+    flip the manifest — the single commit point of every data write."""
     gens = meta.setdefault("gens", {})
     last = meta.setdefault("last_gen", {})
     for b in affected:
@@ -583,109 +532,37 @@ def _migrate_legacy(path: str, meta: dict) -> None:
     _write_history(path, meta, _live_savepoints(path))
 
 
-def _update_zone_maps(df: DataFrame, meta: dict) -> None:
-    """Refresh per-bucket zone maps (min/max of the table's configured
-    ``zone_cols``) for every bucket present in the about-to-be-staged
-    relation — which IS each affected bucket's full new content, so
-    the stats are exact, not merely widened.  Bounds are stored one
-    ulp wider than measured (float conversion of DECIMAL/era types
-    must never tighten a bound; pruning correctness requires
-    supersets).  Buckets absent from this commit keep their previous
-    entries; a bucket the commit empties keeps a stale-but-superset
-    entry that the gens intersection in ``_read_raw`` makes harmless.
-
-    Cost: one extra aggregate over the staged relation per commit —
-    the zone-maps tax, paid only when the table opted in at creation
-    (``write_keyed(zone_cols=[...])``)."""
-    zcols = [c for c in meta.get("zone_cols", []) if c in df.columns]
-    if not zcols:
-        return
-    aggs = []
-    for c in zcols:
-        aggs.append(F.min(F.col(c).cast("double")).alias(f"_mn_{c}"))
-        aggs.append(F.max(F.col(c).cast("double")).alias(f"_mx_{c}"))
-    zm = meta.setdefault("zone_maps", {})
-    for r in df.groupBy(BUCKET_COL).agg(*aggs).collect():
-        ent = {}
-        for c in zcols:
-            mn, mx = r[f"_mn_{c}"], r[f"_mx_{c}"]
-            if mn is not None and mx is not None:
-                ent[c] = [
-                    math.nextafter(mn, -math.inf),
-                    math.nextafter(mx, math.inf),
-                ]
-        b = str(r[BUCKET_COL])
-        if ent:
-            zm[b] = ent
-        else:  # bucket's new content is empty/all-null for every zone col
-            zm.pop(b, None)
-
-
-def _stage_and_publish(
+def _write_and_commit(
     df: DataFrame, path: str, key: str, meta: dict, affected: list | None = None,
 ) -> None:
-    """Materialize ``df`` bucket-partitioned in the staging sibling,
-    then commit via ``_publish``.  ``affected=None`` publishes every
-    bucket the write produced (table creation).
+    """The one data commit: write each bucket of ``df`` straight into
+    its next generation directory (``_kt_bucket=<b>/_kt_gen=<n>``), then
+    flip the manifest.  ``affected=None`` commits every bucket the write
+    produced (table creation).
 
-    The committed bucket set is always the UNION of the caller's
-    ``affected`` list and the buckets actually present in the staging
-    output: if the input plan is non-deterministic (rand/sample/changed
-    source) and re-evaluation lands rows in a bucket the caller didn't
-    precompute, those rows are published rather than silently dropped
-    with the stage directory.
+    Readers resolve data only through the manifest's generation
+    pointers, so the new files stay invisible until ``_commit_manifest``
+    flips it: a crash at any earlier point leaves the previous snapshot
+    readable plus unreferenced orphans.  This is the engine's stand-in
+    for the atomicity the reference got from HBase (HBaseTap.java:44-101
+    delegates lifecycle to the region server), and it renames nothing,
+    so an object store commits the same way.
 
-    When the installed control plane declares ``direct_commit``
-    (object-store planes, where "rename" means copying every data
-    file), the staging step disappears entirely: files are written
-    DIRECTLY at their final generation keys and only the manifest flip
-    makes them visible."""
-    if getattr(_cp(), "direct_commit", False):
-        _direct_publish(df, path, key, meta, affected)
-        return
-    stage = _stage_dir(path)
-    _cp().delete_tree_quiet(stage)
-    _update_zone_maps(df, meta)
-    try:
-        _write_partitioned(df, stage, key)
-        staged = {
-            int(d.split("=", 1)[1])
-            for d in _cp().list_names(stage)
-            if d.startswith(BUCKET_COL + "=")
-        }
-        _publish(stage, path, meta, sorted(set(affected or ()) | staged))
-    finally:
-        _cp().delete_tree_quiet(stage)
+    The next generation of every bucket id is known before Spark runs
+    (the bucket count is fixed at creation; ``last_gen`` is monotone, so
+    it never collides with a retained older generation) and rides the
+    rows as a literal-array lookup.  A crashed attempt reuses those
+    numbers, so before the write its leftovers are cleared: the
+    candidate generation dirs, and the committer's ``_temporary`` tree,
+    whose committed task output the next append to the same root would
+    otherwise merge in.  The candidates are ``affected`` when the caller
+    scoped the merge (its writers guarantee the frame's buckets are a
+    subset), every bucket only on creation and re-bucketing, so
+    control-plane traffic tracks the touched buckets.
 
-
-def _direct_publish(
-    df: DataFrame, path: str, key: str, meta: dict, affected: list | None
-) -> None:
-    """Rename-free commit (object-store pattern): write each bucket's
-    files DIRECTLY into its next generation directory — readers resolve
-    data only through the manifest's generation pointers, so the new
-    files are invisible until ``_commit_manifest`` flips the manifest,
-    which stays the sole commit point.  A crash mid-write leaves only
-    unreferenced orphan directories (the previous snapshot reads
-    fine); the next attempt recomputes the same generation numbers and
-    clears them before writing.
-
-    The next generation per bucket must be known BEFORE Spark runs, so
-    it is precomputed for every possible bucket id (the bucket count is
-    fixed at creation — bounded, driver-side arithmetic only) and
-    attached as a literal-array lookup ``gen = gen_of_bucket[bucket]``
-    — no extra shuffle, no second pass over the data.
-
-    Control-plane traffic tracks the TOUCHED buckets, not the bucket
-    count: orphan probes cover only the buckets this commit can write
-    (``affected`` when the caller scoped the merge — its writers
-    guarantee the frame's buckets are a subset; every bucket only on
-    the O(table) paths where that is the work anyway), and the
-    buckets actually written are collected by an ``Observation`` on
-    the write itself (a bounded ``collect_set`` riding the single
-    pass) instead of per-bucket existence probes — on a real object
-    store each probe is a billable round trip."""
-    _update_zone_maps(df, meta)
+    One ``Observation`` on the write collects the buckets written and,
+    on a zone-mapped table, each candidate bucket's min/max per zone
+    column; data that escaped ``affected`` refuses the commit."""
     gens = meta.setdefault("gens", {})
     last = meta.setdefault("last_gen", {})
     n_buckets = len(meta.get("boundaries", [])) + 1
@@ -693,6 +570,10 @@ def _direct_publish(
         b: max(gens.get(str(b), -1), last.get(str(b), -1)) + 1
         for b in range(n_buckets)
     }
+
+    def gen_dir(b: int) -> str:
+        return os.path.join(path, f"{BUCKET_COL}={b}", f"{GEN_PREFIX}{newgen[b]}")
+
     if affected is None:
         candidates = range(n_buckets)
     else:
@@ -700,75 +581,85 @@ def _direct_publish(
         # ``affected`` so a shrinking re-bucket drops them) cannot be
         # written, so they need no orphan probe
         candidates = [b for b in affected if 0 <= b < n_buckets]
+    _cp().delete_tree_quiet(os.path.join(path, "_temporary"))
     for b in candidates:
-        dst = os.path.join(path, f"{BUCKET_COL}={b}", f"{GEN_PREFIX}{newgen[b]}")
-        if _cp().dir_exists(dst):  # orphan of a crashed attempt
-            _cp().delete_tree_quiet(dst)
+        if _cp().dir_exists(gen_dir(b)):  # orphan of a crashed attempt
+            _cp().delete_tree_quiet(gen_dir(b))
+    zcols = [c for c in meta.get("zone_cols", []) if c in df.columns]
+    stats = [F.collect_set(F.col(BUCKET_COL)).alias("buckets")]
+    for b in candidates:
+        for c in zcols:
+            v = F.when(F.col(BUCKET_COL) == b, F.col(c).cast("double"))
+            stats += [F.min(v).alias(f"_mn{b}_{c}"), F.max(v).alias(f"_mx{b}_{c}")]
+    obs = Observation()
     out = df.withColumn(
         GEN_COL,
         F.array(*[F.lit(newgen[b]) for b in range(n_buckets)])[
             F.col(BUCKET_COL)
         ],
     )
-    obs = Observation()
-    out = _bucket_sorted(
-        out.observe(obs, F.collect_set(F.col(BUCKET_COL)).alias("buckets")), key
-    )
+    out = _bucket_sorted(out.observe(obs, *stats), key)
     out.write.mode("append").partitionBy(BUCKET_COL, GEN_COL).parquet(path)
     try:
-        observed = obs.get["buckets"]
-    except Exception:
+        observed = obs.get
+        produced = sorted(int(b) for b in observed["buckets"])
+    except Py4JJavaError:
         # A frame the optimizer can PROVE empty (e.g. a delete that
         # empties every affected bucket) is collapsed to an empty
-        # relation, which eliminates the CollectMetrics node — no
-        # metrics row is ever produced and obs.get raises from the
-        # JVM.  Fall back to probing gen dirs — ALL buckets, not just
-        # the pre-cleared candidates: if obs.get failed for any other
-        # reason while the frame escaped its declared bucket set, a
-        # candidates-only probe would bypass the produced⊆affected
-        # guard vacuously and silently drop the escaped rows from the
-        # flip.  Candidate dirs were cleared of orphans pre-write, so
-        # existence there means THIS write; a hit OUTSIDE candidates
-        # (this write escaping, or a crashed attempt's leftover) trips
-        # the refuse-to-flip below — a retryable refusal, never a
-        # silent drop.  (Eliminated-CollectMetrics case found by
-        # explore-profile fuzz under KT_PLANE=objectstore; pinned in
-        # test_keyed_property.)
-        observed = [
-            b
-            for b in range(n_buckets)
-            if _cp().dir_exists(
-                os.path.join(
-                    path, f"{BUCKET_COL}={b}", f"{GEN_PREFIX}{newgen[b]}"
-                )
-            )
-        ]
-    produced = sorted(int(b) for b in observed)
+        # relation without the observed node, so no metrics row exists.
+        # Probe ALL buckets, not just the pre-cleared candidates: a hit
+        # outside them (an escaped row) must still trip the refusal
+        # below instead of being silently left out of the flip.
+        observed = None
+        produced = [b for b in range(n_buckets) if _cp().dir_exists(gen_dir(b))]
     if affected is not None and not set(produced) <= set(affected):
-        # data landed in a bucket the orphan probes did not cover —
-        # either the caller broke the frame-buckets ⊆ affected contract
-        # or a crashed attempt's leftover sits in an unprobed dir.
-        # Refuse to flip the manifest (previous snapshot stays intact)
-        # AND delete the offending dirs first: every file there is
-        # uncommitted (this write's escapees or a crashed attempt's),
-        # so the cleanup is safe and makes the refusal actually
-        # retryable — without it a stale leftover outside the affected
-        # set would wedge every later empty-plan commit that recomputes
-        # the same generation number (r10 review).
+        # Data landed in a bucket the orphan probes did not cover: the
+        # caller broke the frame-buckets ⊆ affected contract (e.g. a
+        # non-deterministic plan re-evaluated), and publishing could
+        # merge a crashed attempt's leftovers.  Refuse to flip (the
+        # previous snapshot stays intact) and delete the escaped dirs,
+        # all uncommitted, so a retry starts clean instead of wedging
+        # on the same generation number.
         escaped = sorted(set(produced) - set(affected))
         for b in escaped:
-            _cp().delete_tree_quiet(
-                os.path.join(path, f"{BUCKET_COL}={b}", f"{GEN_PREFIX}{newgen[b]}")
-            )
+            _cp().delete_tree_quiet(gen_dir(b))
         raise AssertionError(
-            f"direct commit found data in buckets {escaped} outside the "
+            f"commit found data in buckets {escaped} outside the "
             f"declared affected set {sorted(affected)}; refusing to commit "
             f"(offending uncommitted dirs deleted — a retry starts clean)"
         )
+    if zcols:
+        _record_zone_maps(meta, zcols, produced, observed)
     written = {str(b): newgen[b] for b in produced}
     _commit_manifest(
         path, meta, sorted(set(affected or ()) | set(produced)), written
     )
+
+
+def _record_zone_maps(
+    meta: dict, zcols: list[str], produced: list[int], observed: dict | None
+) -> None:
+    """Set each produced bucket's zone map (min/max of the table's
+    ``zone_cols`` over its full new content) from the write's
+    observation.  Bounds are stored one ulp wider than measured (float
+    conversion of DECIMAL/era types must never tighten a bound; pruning
+    correctness requires supersets).  Without an observation the
+    produced buckets' entries are dropped: a bucket without an entry is
+    never pruned.  Other buckets keep their entries; one the commit
+    emptied keeps a stale-but-superset entry that the gens intersection
+    in ``_read_raw`` makes harmless."""
+    zm = meta.setdefault("zone_maps", {})
+    for b in produced:
+        zm.pop(str(b), None)
+        if observed is None:
+            continue
+        ent = {}
+        for c in zcols:
+            mn, mx = observed[f"_mn{b}_{c}"], observed[f"_mx{b}_{c}"]
+            if mn is not None and mx is not None:  # else empty/all-null
+                ent[c] = [math.nextafter(mn, -math.inf), math.nextafter(mx, math.inf)]
+        if ent:
+            zm[str(b)] = ent
 
 
 # Manifest keys the engine owns; meta_extra may not shadow them.
@@ -948,9 +839,9 @@ def write_keyed(
 
         if not exists:
             if zone_cols:
-                # fail fast BEFORE the eager localCheckpoint below: a
-                # misspelled zone column should not pay a full batch
-                # materialization to raise
+                # fail fast BEFORE the boundary sampling job below: a
+                # misspelled zone column should not pay a pass over the
+                # batch to raise
                 missing = [c for c in zone_cols if c not in df.columns]
                 if missing:
                     raise ValueError(
@@ -969,13 +860,6 @@ def write_keyed(
                 key,
                 _order_cols(df.columns, key, seq_col),
             )
-            if zone_cols:
-                # pin the batch: the zone-map stats and the staged write
-                # are two actions — a non-deterministic input plan
-                # (rand/sample) re-evaluated between them could publish
-                # rows outside the recorded bounds, turning zone pruning
-                # lossy (same hazard merge_keyed pins against)
-                batch = batch.localCheckpoint(eager=True)
             meta = {
                 "key": key,
                 "boundaries": boundaries,
@@ -1006,10 +890,10 @@ def write_keyed(
                     "col": ttl["col"], "seconds": float(ttl["seconds"]),
                 }
             if zone_cols:
-                # membership validated above, pre-checkpoint
+                # membership validated above
                 meta["zone_cols"] = list(zone_cols)
             _merge_meta_extra(meta, meta_extra)
-            _stage_and_publish(batch, path, key, meta)
+            _write_and_commit(batch, path, key, meta)
             return
 
         meta = _load_meta(path)
@@ -1041,8 +925,8 @@ def _pin(df: DataFrame, meta: dict) -> tuple[DataFrame, list[int]]:
     non-deterministic, and the upstream plan runs once.  The affected
     buckets ride that job as an ``Observation``.  On a plan the
     optimizer proves empty, the observation can be dropped (see
-    ``_direct_publish``); only then are the buckets collected from the
-    pinned rows."""
+    ``_write_and_commit``); only then are the buckets collected from
+    the pinned rows."""
     obs = Observation()
     pinned = (
         df.withColumn(BUCKET_COL, _bucket_expr(meta["key"], meta["boundaries"]))
@@ -1122,7 +1006,7 @@ def _merge(
         _record_written_types(meta, merged)
     _merge_meta_extra(meta, meta_extra)
     # a bucket the merge empties loses its generation pointer
-    _stage_and_publish(merged, path, key, meta, affected)
+    _write_and_commit(merged, path, key, meta, affected)
 
 
 # ---------------------------------------------------------------------------
@@ -1584,7 +1468,7 @@ def compact_keyed(
             if meta.get("ttl"):
                 # purge TTL'd rows from the buckets being rewritten
                 current = _ttl_filter(current, meta["ttl"])
-            _stage_and_publish(current, path, key, meta, sorted(fragmented))
+            _write_and_commit(current, path, key, meta, sorted(fragmented))
             return
         current = _read_raw(spark, path, meta).drop(BUCKET_COL)
         if meta.get("ttl"):
@@ -1612,14 +1496,14 @@ def compact_keyed(
         # Every currently-pointed bucket participates (buckets the new
         # boundaries empty lose their pointer) AND every id the new
         # boundaries can route to: re-bucketed rows may land in buckets
-        # that never held a pointer, and the direct-commit writer's
-        # orphan probes cover exactly the ``affected`` set — an id
-        # outside it would append into a crashed attempt's leftovers.
+        # that never held a pointer, and the writer's orphan probes
+        # cover exactly the ``affected`` set — an id outside it would
+        # append into a crashed attempt's leftovers.
         affected = sorted(
             {int(b) for b in meta.get("gens", {})}
             | set(range(len(meta["boundaries"]) + 1))
         )
-        _stage_and_publish(batch, path, key, meta, affected)
+        _write_and_commit(batch, path, key, meta, affected)
 
 
 def rollback_keyed(path: str, generation: int) -> None:

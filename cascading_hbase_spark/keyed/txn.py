@@ -157,10 +157,6 @@ class _TxnControlPlane(ControlPlane):
         self.staged_deletes: set[str] = set()
         self.base_version: dict[str, int] = {}
 
-    @property
-    def direct_commit(self) -> bool:
-        return bool(getattr(self._inner, "direct_commit", False))
-
     def _history_owner(self, key: str) -> str | None:
         for root in self._roots:
             if key.startswith(root + "/" + _HISTORY + "/"):
@@ -262,9 +258,6 @@ class _TxnControlPlane(ControlPlane):
 
     def ensure_dir(self, prefix: str) -> None:
         self._inner.ensure_dir(prefix)
-
-    def promote_dir(self, src: str, dst: str) -> None:
-        self._inner.promote_dir(src, dst)
 
     def move_object(self, src: str, dst: str) -> None:
         self._inner.move_object(src, dst)

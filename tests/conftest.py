@@ -40,9 +40,9 @@ SF_T2 = "/root/testdata/sf0.01"
 @pytest.fixture(scope="session", autouse=True)
 def _kt_plane():
     """``KT_PLANE=objectstore`` runs the whole selected test session
-    under the object-store control plane (rename-free direct commits,
-    conditional-PUT manifests) — the way to drive the model-based
-    property suites over the cloud port:
+    under the object-store control plane (conditional-PUT manifests,
+    TTL writer lease) — the way to drive the model-based property
+    suites over the cloud port:
 
         KT_PLANE=objectstore pytest tests/test_keyed_property.py
 

@@ -90,10 +90,6 @@ class RecordingControlPlane(ControlPlane):
         self._rec("delete_tree_quiet")
         self.inner.delete_tree_quiet(prefix)
 
-    def promote_dir(self, src, dst):
-        self._rec("promote_dir")
-        self.inner.promote_dir(src, dst)
-
     def move_object(self, src, dst):
         self._rec("move_object")
         self.inner.move_object(src, dst)
@@ -137,12 +133,30 @@ def test_engine_routes_through_the_seam(spark, tmp_path):
     # the covered control-plane surface was exercised via the seam
     for op in (
         "read_json", "write_json_atomic", "object_exists", "list_names",
-        "dir_exists", "delete_tree_quiet", "promote_dir",
-        "object_size", "writer_lease",
+        "dir_exists", "delete_tree_quiet", "object_size", "writer_lease",
     ):
         assert rec.calls.get(op, 0) > 0, f"{op} never routed through the seam"
     # and the seam was properly restored
     assert not isinstance(get_control_plane(), RecordingControlPlane)
+
+
+def test_local_commits_stage_and_rename_nothing(spark, tmp_path):
+    """On the local plane every commit writes straight into the table's
+    generation directories: a create, APPEND, delete and compaction
+    leave nothing beside the table directory and rename nothing."""
+    from cascading_hbase_spark.keyed.table import compact_keyed, delete_keyed
+
+    path = str(tmp_path / "t")
+    rec = RecordingControlPlane()
+    with use_control_plane(rec):
+        write_keyed(_df(spark, [(i, f"v{i}") for i in range(20)]), path, "key")
+        write_keyed(_df(spark, [(3, "c"), (21, "u")]), path, "key")
+        delete_keyed(spark, path, spark.createDataFrame([(4,)], "key long"))
+        compact_keyed(spark, path)
+        got = {(r.key, r.val) for r in read_keyed(spark, path).collect()}
+    assert len(got) == 20 and (3, "c") in got and (21, "u") in got
+    assert _os.listdir(tmp_path) == ["t"]
+    assert "move_object" not in rec.calls, rec.calls
 
 
 def test_history_prune_routes_delete_quiet(spark, tmp_path, monkeypatch):

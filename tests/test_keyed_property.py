@@ -241,7 +241,7 @@ _mv_op = st.one_of(
 # explore-fuzz falsifier under KT_PLANE=objectstore: a delete that
 # empties every affected bucket writes a PROVABLY-empty frame, whose
 # CollectMetrics node the optimizer eliminates — obs.get raised from
-# the JVM in the direct-commit writer's written-bucket detection
+# the JVM in the commit's written-bucket detection
 @example(
     ops=[
         ("append", [(0, 0), (0, 0), (0, 0), (2, 0), (0, 0), (0, 0), (0, 0), (0, 0)]),

@@ -28,8 +28,9 @@ from cascading_hbase_spark.keyed.table import (
 # (lease exclusion, rename-free commits, refuse-on-surprise).
 localfs_plane_only = pytest.mark.skipif(
     os.environ.get("KT_PLANE") == "objectstore",
-    reason="local-FS control-plane mechanics (pid lock / stage dir / "
-    "legacy layout); object-store twin covered in test_objectstore.py",
+    reason="local-FS control-plane mechanics (pid lock / legacy layout / "
+    "history and manifest files on disk); object-store twin covered in "
+    "test_objectstore.py",
 )
 
 # The reference fixture: 13 space-separated rows `num lower upper`,
@@ -194,28 +195,6 @@ def test_append_bumps_seq_before_write(spark, tmp_path):
     assert rows == {"a": "v1"}
 
 
-@localfs_plane_only
-def test_stray_stage_dir_is_invisible_to_reads(spark, tmp_path):
-    """A staging sibling left by a crashed merge lives OUTSIDE the table
-    directory, so partition discovery never sees it; the next APPEND
-    clears and reuses it."""
-    path = str(tmp_path / "crashtable")
-    df = spark.createDataFrame([("a", 1), ("b", 2)], "key string, val int")
-    write_keyed(df, path, "key")
-    # simulate a crashed merge: stale staging dir with plausible content
-    stage = path + "__kt_stage"
-    os.makedirs(os.path.join(stage, "_kt_bucket=0"), exist_ok=True)
-    with open(os.path.join(stage, "_kt_bucket=0", "junk.parquet"), "wb") as f:
-        f.write(b"not parquet")
-    assert read_keyed(spark, path).count() == 2
-    # next write proceeds normally and cleans the stage
-    write_keyed(
-        spark.createDataFrame([("c", 3)], "key string, val int"), path, "key"
-    )
-    assert read_keyed(spark, path).count() == 3
-    assert not os.path.exists(stage)
-
-
 def test_uncommitted_generation_is_invisible(spark, tmp_path):
     """Snapshot isolation: generation dirs not referenced by the
     manifest (a crash between data move and manifest flip) must be
@@ -279,6 +258,7 @@ def _flatten_to_legacy(path: str) -> None:
         json.dump(meta, f)
 
 
+@localfs_plane_only
 def test_legacy_flat_layout_migrates_on_append(spark, tmp_path):
     """A pre-generation table (flat bucket dirs, no gens in the
     manifest) must migrate in place on the first write, keeping every
@@ -546,24 +526,85 @@ def test_time_travel_beyond_retain_raises(spark, tmp_path):
         read_keyed(spark, path, generation=1)
 
 
-@localfs_plane_only
-def test_staged_surprise_buckets_are_published(spark, tmp_path):
-    """If plan re-evaluation lands rows in a bucket the caller's
-    affected list missed (non-deterministic input), the staged bucket
-    is published, not silently deleted with the stage dir."""
+def test_surprise_buckets_are_refused(spark, tmp_path, plane):
+    """Rows that land in a bucket outside the caller's affected list
+    (plan re-evaluation on non-deterministic input) refuse the commit:
+    that bucket's next generation dir was never orphan-probed, so
+    publishing it could merge a crashed attempt's leftovers.  The
+    manifest never flips, the escaped dir is deleted, and a retry with
+    an honest affected list publishes."""
     from cascading_hbase_spark.keyed import table as kt
 
     path = str(tmp_path / "surprise")
     df = spark.createDataFrame([("a", 1), ("z", 2)], "key string, val int")
     write_keyed(df, path, "key", n_buckets=2)
     meta = kt._load_meta(path)
-    staged = spark.createDataFrame(
+    batch = spark.createDataFrame(
         [("b", 5, 1, 0), ("y", 6, 1, 1)],
         "key string, val int, _kt_seq int, _kt_bucket int",
     )
-    kt._stage_and_publish(staged, path, "key", meta, affected=[0])
+    with pytest.raises(AssertionError, match="outside the declared"):
+        kt._write_and_commit(batch, path, "key", meta, affected=[0])
+    # manifest never flipped: previous snapshot intact
+    assert kt.table_version(path) == meta["version"]
     keys = {r["key"] for r in read_keyed(spark, path).collect()}
-    assert "y" in keys  # bucket 1 was staged -> published despite affected=[0]
+    assert keys == {"a", "z"}
+    # the escaped dir was deleted, so the refusal is retryable
+    escaped = os.path.join(
+        path, "_kt_bucket=1", f"_kt_gen={meta['last_gen']['1'] + 1}"
+    )
+    assert not os.path.exists(escaped)
+    # the same batch with an honest affected set publishes (each
+    # affected bucket's generation IS its full new content, so the
+    # batch's rows replace both buckets)
+    meta = kt._load_meta(path)
+    kt._write_and_commit(batch, path, "key", meta, affected=[0, 1])
+    keys = {r["key"] for r in read_keyed(spark, path).collect()}
+    assert keys == {"b", "y"}
+
+
+def test_crashed_write_leftovers_are_not_published(spark, tmp_path, plane):
+    """A driver killed after a task committed leaves that task's output
+    under ``<table>/_temporary/0/``; the file committer merges it into
+    the next append at the same root, at the generation number the
+    crashed attempt used, which the next commit reuses.  The commit
+    clears it first: every key keeps exactly one row and the stale row
+    never appears."""
+    import shutil
+
+    from cascading_hbase_spark.keyed import table as kt
+
+    path = str(tmp_path / "kt")
+    write_keyed(
+        spark.createDataFrame(
+            [(f"k{i:03d}", i) for i in range(100)], "key string, val int"
+        ),
+        path, "key", n_buckets=4,
+    )
+    meta = kt._load_meta(path)
+    b = kt._bucket_of("k050", meta["boundaries"])
+    nextgen = max(meta["gens"][str(b)], meta["last_gen"][str(b)]) + 1
+    # one valid parquet file holding a stale row for the APPEND's key
+    scratch = str(tmp_path / "stale")
+    spark.createDataFrame(
+        [("k050", -999, 0)], "key string, val int, _kt_seq long"
+    ).coalesce(1).write.parquet(scratch)
+    task = os.path.join(
+        path, "_temporary", "0", "task_202601010000_0001_m_000000",
+        f"_kt_bucket={b}", f"_kt_gen={nextgen}",
+    )
+    os.makedirs(task)
+    for f in os.listdir(scratch):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(scratch, f), task)
+    write_keyed(
+        spark.createDataFrame([("k050", 50050)], "key string, val int"),
+        path, "key",
+    )
+    rows = read_keyed(spark, path).collect()
+    assert len(rows) == 100 and len({r["key"] for r in rows}) == 100
+    got = {r["key"]: r["val"] for r in rows}
+    assert got["k050"] == 50050 and -999 not in got.values()
 
 
 @localfs_plane_only
@@ -2356,6 +2397,7 @@ def test_batch_changefeed_prunes_across_rebucket(spark, tmp_path):
     assert f34.count() == 0 and f34.inputFiles() == []
 
 
+@localfs_plane_only
 def test_changefeed_rebucket_prune_respects_ttl_and_missing_history(
     spark, tmp_path
 ):
@@ -2570,7 +2612,7 @@ def test_append_of_wider_type_widens_manifest_schema(spark, tmp_path):
 @pytest.fixture(params=["local", "objectstore"])
 def plane(request):
     """Run a test on the default plane and again on the object-store
-    plane (rename-free direct commits)."""
+    plane (conditional-PUT manifests, TTL writer lease)."""
     if request.param == "local":
         yield
         return
@@ -2789,12 +2831,10 @@ def test_merge_plan_has_one_exchange(spark, tmp_path, plane):
 
 
 def test_hot_key_append_job_budget(spark, tmp_path, plane):
-    """A hot-key APPEND into a zone-mapped table runs at most 5 Spark
-    jobs: the batch pin (which also finds the affected buckets), the
-    zone-map aggregate and the write.  Its only collect in
-    ``keyed/table.py`` is the zone-map aggregate's."""
-    import inspect
-
+    """A hot-key APPEND into a zone-mapped table runs at most 3
+    Spark jobs: the batch pin (which also finds the affected buckets)
+    and the write, whose observation also carries the zone maps.  It
+    collects nothing in ``keyed/table.py``."""
     from cascading_hbase_spark.keyed import table as kt
 
     path = str(tmp_path / "kt")
@@ -2804,26 +2844,24 @@ def test_hot_key_append_job_budget(spark, tmp_path, plane):
         ),
         path, "k", n_buckets=8, seq_col="g", zone_cols=["v"],
     )
-    src, first = inspect.getsourcelines(kt._update_zone_maps)
-    zone_site = next(
-        f"table.py:{first + i}" for i, line in enumerate(src) if ".collect()" in line
-    )
 
     def hot():
         return spark.createDataFrame(
             [(i, 9, -1.0) for i in range(500, 505)], "k long, g int, v double"
         )
 
-    assert _jobs_run(spark, lambda: write_keyed(hot(), path, "k", seq_col="g")) <= 5
+    assert _jobs_run(spark, lambda: write_keyed(hot(), path, "k", seq_col="g")) <= 3
     sites = _collect_sites(spark, lambda: write_keyed(hot(), path, "k", seq_col="g"))
-    assert all(s.endswith(zone_site) for s in sites), (sites, zone_site)
+    assert sites == set(), sites
     zm = kt._load_meta(path)["zone_maps"]
     assert min(lo for lo, _hi in (e["v"] for e in zm.values())) < -0.99
 
 
 def test_pin_falls_back_when_observation_is_dropped(spark, tmp_path, monkeypatch):
     """If the optimizer drops the pin's observation, the affected
-    buckets are collected from the pinned rows instead."""
+    buckets are collected from the pinned rows instead.  If it drops
+    the write's, the written buckets are probed and lose their zone
+    maps, so a zone filter reads them instead of pruning them."""
     import pyspark.sql.functions as F
     from pyspark.sql import Observation
 
@@ -2843,17 +2881,22 @@ def test_pin_falls_back_when_observation_is_dropped(spark, tmp_path, monkeypatch
     path = str(tmp_path / "kt")
     write_keyed(
         spark.createDataFrame([(i, i) for i in range(100)], "k long, v long"),
-        path, "k", n_buckets=4,
+        path, "k", n_buckets=4, zone_cols=["v"],
     )
     monkeypatch.setattr(kt, "Observation", Dropped)
     batch = spark.createDataFrame([(1, -1), (98, -98)], "k long, v long")
     pinned, affected = kt._pin(batch, kt._load_meta(path))
     meta = kt._load_meta(path)
     assert affected == sorted({kt._bucket_of(k, meta["boundaries"]) for k in (1, 98)})
+    assert sorted(meta["zone_maps"]) == ["0", "1", "2", "3"]
     assert pinned.count() == 2
     write_keyed(batch, path, "k")
     rows = {r["k"]: r["v"] for r in read_keyed(spark, path).collect()}
     assert rows[1] == -1 and rows[98] == -98 and len(rows) == 100
+    zm = kt._load_meta(path)["zone_maps"]
+    assert sorted(zm) == sorted({"0", "1", "2", "3"} - {str(b) for b in affected})
+    low = read_keyed(spark, path, zone_filter=("v", None, -1)).collect()
+    assert sorted(r["k"] for r in low) == [1, 98]
 
 
 def test_empty_batches_commit(spark, tmp_path, plane):
@@ -2893,6 +2936,7 @@ def test_empty_batches_commit(spark, tmp_path, plane):
     assert hits == [i for i in range(40) if i % 2]
 
 
+@localfs_plane_only
 def test_commit_reads_savepoint_registry_once(spark, tmp_path):
     """Every commit reads the savepoint registry once, and still drops
     expired entries under the writer lock."""

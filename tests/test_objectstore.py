@@ -364,16 +364,14 @@ def _assert_no_control_files_on_fs(root):
     for dirpath, _dirnames, filenames in os.walk(root):
         for f in filenames:
             assert not f.endswith(".json"), os.path.join(dirpath, f)
-        assert "__kt_stage" not in dirpath
 
 
 def test_keyed_lifecycle_on_object_store_plane(spark, tmp_path):
     """Full lifecycle under the object-store plane: every data file is
-    written direct-to-final (promote_dir raises under this plane, so a
-    single staged rename anywhere would fail the test), every control
-    document lives in the store (no .json ever on the local FS), and
-    LWW / time travel / changefeed / compaction / vacuum / REPLACE all
-    behave exactly as on the default plane."""
+    written direct-to-final (the plane has no rename primitive), every
+    control document lives in the store (no .json ever on the local
+    FS), and LWW / time travel / changefeed / compaction / vacuum /
+    REPLACE all behave exactly as on the default plane."""
     path = str(tmp_path / "t")
     cp = ObjectStoreControlPlane()
     with use_control_plane(cp):
@@ -403,43 +401,6 @@ def test_keyed_lifecycle_on_object_store_plane(spark, tmp_path):
         _assert_no_control_files_on_fs(str(tmp_path))
         # and the store holds the control documents
         assert cp.object_exists(os.path.join(path, "_kt_meta.json"))
-
-
-def test_direct_commit_refuses_surprise_buckets(spark, tmp_path):
-    """The staged writer PUBLISHES buckets its affected list missed
-    (plan re-evaluation on non-deterministic input); the direct writer
-    must REFUSE instead — a surprise bucket's final dir was never
-    orphan-probed, so publishing could merge a crashed attempt's
-    leftovers. The refusal happens before the manifest flip (previous
-    snapshot reads intact) and deletes the offending uncommitted dirs
-    so a retry starts clean instead of wedging on the same leftover
-    (deliberate plane difference, documented on both sides)."""
-    from cascading_hbase_spark.keyed import table as kt
-
-    path = str(tmp_path / "surprise")
-    with use_control_plane(ObjectStoreControlPlane()):
-        df = spark.createDataFrame(
-            [("a", 1), ("z", 2)], "key string, val int"
-        )
-        write_keyed(df, path, "key", n_buckets=2)
-        meta = kt._load_meta(path)
-        batch = spark.createDataFrame(
-            [("b", 5, 1, 0), ("y", 6, 1, 1)],
-            "key string, val int, _kt_seq int, _kt_bucket int",
-        )
-        with pytest.raises(AssertionError, match="outside the declared"):
-            kt._stage_and_publish(batch, path, "key", meta, affected=[0])
-        # manifest never flipped: previous snapshot intact
-        keys = {r["key"] for r in read_keyed(spark, path).collect()}
-        assert keys == {"a", "z"}
-        # the escaped dir was cleaned, so the refusal is retryable —
-        # the same batch with an honest affected set then publishes
-        # (each affected bucket's generation IS its full new content,
-        # so the batch's rows replace both buckets)
-        meta = kt._load_meta(path)
-        kt._stage_and_publish(batch, path, "key", meta, affected=[0, 1])
-        keys = {r["key"] for r in read_keyed(spark, path).collect()}
-        assert keys == {"b", "y"}
 
 
 def test_direct_commit_delete_empties_table(spark, tmp_path):
@@ -486,7 +447,7 @@ def test_direct_commit_rebucket_grow_and_shrink(spark, tmp_path):
 
 def test_direct_commit_point_lookup_and_range(spark, tmp_path):
     """Bucket-pruned reads (range scan, multi-Get) work identically on
-    direct-committed layouts — same dirs, same manifest pointers."""
+    the object-store plane — same dirs, same manifest pointers."""
     from cascading_hbase_spark.keyed.table import get_keyed
 
     path = str(tmp_path / "t")

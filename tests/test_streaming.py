@@ -676,7 +676,7 @@ def test_stream_maintained_cms(spark, tmp_path):
 def test_stream_upserts_maintain_zone_maps(spark, tmp_path):
     """A table created with zone_cols keeps its per-bucket zone maps
     fresh under the streaming upsert sink: every micro-batch commit
-    goes through the same stage-and-publish choke point as batch
+    goes through the same commit (``_write_and_commit``) as batch
     writes, so a zone_filter read after the stream drains is exact."""
     from cascading_hbase_spark.keyed.table import write_keyed
 

@@ -75,9 +75,9 @@ def main() -> None:
     plane = os.environ.get("KT_PLANE", "localfs")
     if plane == "objectstore":
         # run the SAME lifecycle under the cloud-port plane: manifests
-        # via conditional-PUT commit protocol, data files committed
-        # rename-free at final generation keys (direct_commit) —
-        # measures what the object-store pattern costs vs the default.
+        # via conditional-PUT commit protocol (data files are written at
+        # their final generation keys on every plane) — measures what
+        # the object-store control plane costs vs the default.
         # r12: FILE-BACKED store (shared root, one flock per request)
         # so the changefeed streaming source's planning worker sees
         # the same manifests — the stream steps run on this plane too.
