@@ -14,7 +14,8 @@ Semantics (SURVEY.md §1.1, §2.1):
   prepended per HBaseScheme.java:157-162.
 - upserts and deletes per TableOutputFormatWrap.java:79-84: APPEND,
   ``delete_keyed`` and ``merge_keyed`` all commit through one bucket
-  merge (``_merge``): anti-join the deleted keys, LWW the upserts.
+  merge (``_merge``): one LWW window over the stored rows, the deleted
+  keys as tombstones and the upserts.
 
 Physical layout — designed so the 100 TB append is incremental AND
 transactional:
@@ -67,11 +68,13 @@ Readers never take the lock (snapshot isolation via the manifest).
 
 from __future__ import annotations
 
+import collections
 import contextlib
 import enum
 import json
 import math
 import os
+import threading
 import uuid
 
 import pyspark.sql.functions as F
@@ -99,6 +102,7 @@ SEQ_COL = "_kt_seq"
 BUCKET_COL = "_kt_bucket"
 GEN_COL = "_kt_gen"
 GEN_PREFIX = GEN_COL + "="
+_RANK = "_kt_rank"  # a merge's stored row (0), tombstone (1) or upsert (2)
 META_FILE = "_kt_meta.json"
 HISTORY_DIR = "_kt_history"
 DEFAULT_RETAIN = 2
@@ -599,7 +603,11 @@ def _write_and_commit(
         ],
     )
     out = _bucket_sorted(out.observe(obs, *stats), key)
-    out.write.mode("append").partitionBy(BUCKET_COL, GEN_COL).parquet(path)
+    # the file committer would mark the table root with a _SUCCESS file,
+    # rewritten per commit and read by nothing
+    out.write.mode("append").partitionBy(BUCKET_COL, GEN_COL).option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    ).parquet(path)
     try:
         observed = obs.get
         produced = sorted(int(b) for b in observed["buckets"])
@@ -920,7 +928,7 @@ def _pin(df: DataFrame, meta: dict) -> tuple[DataFrame, list[int]]:
     """Pin a merge batch (the delta, not the table) with its bucket
     column, and find the buckets it touches in the same job.
 
-    The pin is an eager ``localCheckpoint``: the merge's read, anti-join
+    The pin is an eager ``localCheckpoint``: the merge's read, window
     and write see the SAME rows even if the input plan is
     non-deterministic, and the upstream plan runs once.  The affected
     buckets ride that job as an ``Observation``.  On a plan the
@@ -957,17 +965,18 @@ def _merge(
     the buckets either side touches; either side may be None.  A
     legacy flat layout is migrated first.
 
-    Only the affected buckets are read and rewritten: the ``deletes``
-    keys are anti-joined out, then the ``upserts`` rows win
-    last-write-wins (a key both deleted and upserted resolves
-    delete-then-insert), and one manifest flip publishes the result.
-    The last-write-wins window and the write share one shuffle on the
-    bucket id, so each touched bucket gets one new file.  Only the
-    upsert side evolves the schema, bumps ``next_seq`` and registers
-    ``seq_col``."""
+    Only the affected buckets are read and rewritten: one
+    last-write-wins window ranks each key's stored row, its ``deletes``
+    tombstone and its ``upserts`` rows in that order (a key both deleted
+    and upserted resolves delete-then-insert), tombstones that win drop
+    the key, and one manifest flip publishes the result.  The window and
+    the write share one shuffle on the bucket id, so each touched bucket
+    gets one new file.  Only the upsert side evolves the schema, bumps
+    ``next_seq`` and registers ``seq_col``."""
     _migrate_legacy(path, meta)
     key = meta["key"]
     _backfill_schema(spark, path, meta, upserts)
+    order: list = []
     if upserts is not None:
         order = _order_cols(upserts.columns, key, seq_col)
         # Additive schema evolution (a new column is a new HBase
@@ -998,11 +1007,26 @@ def _merge(
         upserts = upserts.withColumn(SEQ_COL, F.lit(seq))
     merged = _read_raw(spark, path, meta, buckets=set(affected))
     if deletes is not None:
-        merged = merged.join(deletes.select(key), key, "left_anti")
-    if upserts is not None:
-        merged = _lww(
-            merged.unionByName(upserts, allowMissingColumns=True), key, order
+        # The delete keys join the last-write-wins window as tombstones
+        # over (bucket, key): a tombstone outranks the stored row and
+        # loses to an upsert of the same batch (delete-then-insert), so
+        # deletes ride the window's one shuffle instead of a join.  A
+        # key the table's key type cannot hold matches no row.
+        tombs = deletes.select(
+            F.col(key).try_cast(merged.schema[key].dataType).alias(key), BUCKET_COL
+        ).where(F.col(key).isNotNull())
+        merged = merged.withColumn(_RANK, F.lit(0)).unionByName(
+            tombs.withColumn(_RANK, F.lit(1)), allowMissingColumns=True
         )
+        if upserts is not None:
+            upserts = upserts.withColumn(_RANK, F.lit(2))
+        order = [F.col(_RANK), *order]
+    if upserts is not None:
+        merged = merged.unionByName(upserts, allowMissingColumns=True)
+    merged = _lww(merged, key, order)
+    if deletes is not None:
+        merged = merged.filter(F.col(_RANK) != 1).drop(_RANK)
+    if upserts is not None:
         _record_written_types(meta, merged)
     _merge_meta_extra(meta, meta_extra)
     # a bucket the merge empties loses its generation pointer
@@ -1272,6 +1296,125 @@ def read_keyed(
     return df
 
 
+# A committed ``_kt_bucket=<b>/_kt_gen=<g>`` directory is never rewritten:
+# ``last_gen`` is monotone across commits and rollbacks, and REPLACE gets
+# a new ``table_id``.  So gets may serve a generation's rows from the
+# driver.  One entry per generation, keyed by (application id, path,
+# table_id, manifest schema JSON, bucket, generation); its value is
+# (rows, schema, size estimate), the rows as ``_read_raw`` yields them
+# (a JVM ``java.util.List<Row>``: nothing crosses into Python) and their
+# JVM schema.  Least recently used first.
+_HELD: collections.OrderedDict = collections.OrderedDict()
+_HELD_LOCK = threading.Lock()
+# path -> the (application id, table_id, version, bound) whose snapshot
+# was found larger than the bound: its gets skip the size estimate
+_OVER_BOUND: dict = {}
+
+
+def _held_rows(
+    spark: SparkSession, path: str, meta: dict, wanted: set[int]
+) -> DataFrame | None:
+    """The ``wanted`` buckets of ``meta``'s snapshot as one local
+    relation over held generations, which Spark's optimizer folds the
+    get's filters and projection into (collecting runs no job).  A miss
+    loads every bucket of the snapshot not yet held, in one job.  None
+    when the snapshot is not held: the caller reads parquet.
+
+    Never held: legacy layouts and manifests without ``table_id`` or
+    ``schema`` (nothing to key on), and every read inside a
+    ``multi_commit`` block, whose staged manifests point at generations
+    an abort lets the next commit reuse."""
+    from cascading_hbase_spark.keyed.txn import _TxnControlPlane
+
+    gens, table_id, schema = meta.get("gens"), meta.get("table_id"), meta.get("schema")
+    if gens is None or not table_id or not schema or isinstance(_cp(), _TxnControlPlane):
+        return None
+    snap = {int(b): g for b, g in gens.items()}
+    hit = sorted(b for b in wanted if b in snap)
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if not hit or limit < 0:
+        return None  # no wanted bucket holds rows, or holding is off (-1)
+    app = spark.sparkContext.applicationId
+    keys = {b: (app, path, table_id, schema, b, g) for b, g in snap.items()}
+    token = (app, table_id, meta.get("version"), limit)
+    with _HELD_LOCK:
+        if _HELD and next(iter(_HELD))[0] != app:
+            _HELD.clear()  # a restarted session's (entries share one app)
+        held = {b: _HELD[k] for b, k in keys.items() if k in _HELD}
+        for b in hit:
+            if b in held:
+                _HELD.move_to_end(keys[b])
+        over = _OVER_BOUND.get(path) == token
+    if any(b not in held for b in hit):
+        if over:
+            return None
+        loaded = _load_generations(spark, path, meta, keys, held, limit)
+        if loaded is None:  # the snapshot exceeds the bound: hold none of it
+            with _HELD_LOCK:
+                _OVER_BOUND[path] = token
+                for k in [k for k in _HELD if k[1] == path]:
+                    del _HELD[k]
+            return None
+        held.update(loaded)
+    rows = spark.sparkContext._jvm.java.util.ArrayList()
+    for b in hit:
+        rows.addAll(held[b][0])
+    return DataFrame(spark._jsparkSession.createDataFrame(rows, held[hit[0]][1]), spark)
+
+
+def _load_generations(
+    spark: SparkSession, path: str, meta: dict, keys: dict, held: dict, limit: int
+) -> dict | None:
+    """Load every bucket of the snapshot that ``held`` lacks in ONE
+    Spark job and hold it, unless the snapshot's size estimate (Spark's
+    own, from the listed files, no job) exceeds ``limit``: then load
+    nothing and return None.  Other tables' least recently used
+    generations make room; this path's generations the snapshot does
+    not point at are dropped."""
+    missing = sorted(set(keys) - set(held))
+    fill = _read_raw(spark, path, meta, buckets=set(missing))
+    fill = fill.coalesce(1).sortWithinPartitions(BUCKET_COL)._jdf
+    # planned once: the collect below reuses this optimized plan
+    need = fill.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if need + sum(e[2] for e in held.values()) > limit:
+        return None
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"keyed.get fill {path} v{meta.get('version')}")
+    try:
+        rows = fill.collectAsList()
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    schema = fill.schema()
+    col, n, jvm = schema.fieldIndex(BUCKET_COL), rows.size(), sc._jvm
+    loaded = {b: (jvm.java.util.ArrayList(), schema, 0) for b in missing}
+    lo = 0
+    while lo < n:  # rows sorted by bucket: binary-search where each run ends
+        b = rows.get(lo).getInt(col)
+        end, h = lo + 1, n
+        while end < h:
+            m = (end + h) // 2
+            if rows.get(m).getInt(col) > b:
+                h = m
+            else:
+                end = m + 1
+        part = jvm.java.util.ArrayList(rows.subList(lo, end))
+        loaded[b] = (part, schema, need * (end - lo) // n)
+        lo = end
+    mine = set(keys.values())
+    with _HELD_LOCK:
+        for k in [k for k in _HELD if k[1] == path and k not in mine]:
+            del _HELD[k]
+        total = sum(e[2] for e in _HELD.values())
+        for k in [k for k in _HELD if k not in mine]:
+            if total + need <= limit:
+                break
+            total -= _HELD.pop(k)[2]
+        for b, e in loaded.items():
+            _HELD[keys[b]] = e
+    return loaded
+
+
 def get_keyed(
     spark: SparkSession,
     path: str,
@@ -1284,20 +1427,33 @@ def get_keyed(
     ``keys`` (a plain Python list of key values, the point-query
     shape).
 
-    Pruning is maximal: the requested keys route to their buckets
-    driver-side (boundaries live in the manifest), ONLY those buckets'
-    live generation dirs are listed, and the IN-list predicate pushes
-    into the sorted parquet scan (row-group min/max skipping).  A
-    1000-bucket table asked for 3 keys reads at most 3 buckets.  The
-    schema comes from the manifest (no footer-inference job: collecting
-    the result runs one Spark job), with evolved columns read as typed
-    nulls."""
+    The requested keys route to their buckets driver-side (boundaries
+    live in the manifest).  A small table is held whole in the driver
+    on its first get: its committed bucket generations are immutable,
+    so later gets serve those buckets' rows as a local relation and
+    collecting the result runs no Spark job, as an HBase Get is served
+    from immutable store files through the block cache.  A commit
+    reloads only the buckets it rewrote.  "Small" is Spark's own
+    broadcast rule: the snapshot's size estimate, together with every
+    other table held, must stay within
+    ``spark.sql.autoBroadcastJoinThreshold`` (least recently used
+    generations make room; ``-1`` holds nothing).
+
+    A larger table, and every get inside a ``multi_commit`` block, reads
+    parquet with maximal pruning: ONLY the wanted buckets' live
+    generation dirs are listed, and the IN-list predicate pushes into
+    the sorted scan (row-group min/max skipping).  A 1000-bucket table
+    asked for 3 keys reads at most 3 buckets, in one Spark job.  Either
+    way the schema comes from the manifest, with evolved columns read
+    as typed nulls, and TTL expiry is cut per call."""
     if not keys:
         raise ValueError("get_keyed requires at least one key")
     meta = _meta_at(path, generation)
     key, boundaries = meta["key"], meta["boundaries"]
     wanted = {_bucket_of(k, boundaries) for k in keys}
-    df = _read_raw(spark, path, meta, buckets=wanted)
+    df = _held_rows(spark, path, meta, wanted)
+    if df is None:
+        df = _read_raw(spark, path, meta, buckets=wanted)
     df = df.filter(F.col(key).isin(list(keys)))
     if meta.get("ttl"):
         df = _ttl_filter(df, meta["ttl"])
@@ -1309,14 +1465,14 @@ def get_keyed(
 
 def delete_keyed(spark: SparkSession, path: str, keys: DataFrame) -> None:
     """Delete rows whose key appears in ``keys`` (single-column DF) —
-    the Delete dispatch of TableOutputFormatWrap.java:79-84 as an
-    anti-join rewrite of only the affected buckets, through the same
+    the Delete dispatch of TableOutputFormatWrap.java:79-84 as a
+    tombstone rewrite of only the affected buckets, through the same
     merge commit as APPEND and MERGE (with no upserts: the seq counter
     and the schema stay as they are)."""
     with _writer_lock(path):
         meta = _load_meta(path)
         # Pin the key set: a non-deterministic keys plan must yield the
-        # SAME keys to the affected buckets and the anti-join, or a key
+        # SAME keys to the affected buckets and the tombstones, or a key
         # could route to a bucket never rewritten and silently survive.
         keys, affected = _pin(keys.toDF(meta["key"]), meta)
         _merge(spark, path, meta, None, keys, affected, None, None)

@@ -6,6 +6,7 @@ MultiFamilyHBaseTest's upsert semantics."""
 from __future__ import annotations
 
 import os
+import random
 import uuid
 
 from hypothesis import HealthCheck, example, given, settings
@@ -14,7 +15,7 @@ from hypothesis import strategies as st
 
 from tests.conftest import _examples  # noqa: E402  (shared budget helper)
 
-from cascading_hbase_spark.keyed.table import read_keyed, write_keyed
+from cascading_hbase_spark.keyed.table import get_keyed, read_keyed, write_keyed
 
 # A batch: list of (key, value) writes applied in order.
 _batch = st.lists(
@@ -88,6 +89,7 @@ def test_keyed_op_mix_matches_dict_model(spark, tmp_path_factory, ops):
     # append over a wide row nulls 'extra' (its batch column is null).
     model: dict[int, tuple] = {}
     created = False
+    rng = random.Random(0)
     for op, arg in ops:
         if op == "append":
             rows = [(k, v, i) for i, (k, v) in enumerate(arg)]
@@ -135,6 +137,15 @@ def test_keyed_op_mix_matches_dict_model(spark, tmp_path_factory, ops):
                     model[k] = (v, None)
         elif op == "compact" and created:
             compact_keyed(spark, path, n_buckets=arg)
+        if created:
+            # a multi-get of random keys (some absent) sees every step,
+            # whether its buckets are held or reloaded after the commit
+            keys = rng.sample(range(12), 3)
+            got = get_keyed(spark, path, keys)
+            assert {
+                r["key"]: (r["val"], r["extra"] if "extra" in got.columns else None)
+                for r in got.collect()
+            } == {k: model[k] for k in keys if k in model}
     if created:
         out = read_keyed(spark, path)
         stored = {

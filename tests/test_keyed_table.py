@@ -961,7 +961,10 @@ def test_composite_key_prefix_range_scan(spark, tmp_path):
 def test_get_keyed_point_lookup_prunes_buckets(spark, tmp_path):
     """HBase multi-Get analogue: only the requested keys' buckets are
     listed (driver-side pruning), the IN predicate pushes to the scan,
-    and results match the full-scan filter."""
+    and results match the full-scan filter.  With the driver-side
+    generation cache off (``autoBroadcastJoinThreshold=-1``) the get
+    reads parquet; with it on, the same gets return the same rows and
+    a warm one runs no Spark job."""
     from cascading_hbase_spark.keyed.table import get_keyed
 
     path = str(tmp_path / "kt")
@@ -969,18 +972,37 @@ def test_get_keyed_point_lookup_prunes_buckets(spark, tmp_path):
         [(i, i * 10) for i in range(40)], "k bigint, v bigint"
     )
     write_keyed(df, path, "k", n_buckets=4)
-    got = get_keyed(spark, path, [3, 37])
-    assert sorted(map(tuple, got.collect())) == [(3, 30), (37, 370)]
-    # pruning: the plan's file scan must reference at most 2 bucket dirs
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "In(k, [3,37])" in plan or "isin" in plan.lower() or "IN (" in plan, plan
-    import re
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        got = get_keyed(spark, path, [3, 37])
+        assert sorted(map(tuple, got.collect())) == [(3, 30), (37, 370)]
+        # pruning: the plan's file scan must reference at most 2 bucket dirs
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "In(k, [3,37])" in plan or "isin" in plan.lower() or "IN (" in plan, plan
+        import re
 
-    dirs = set(re.findall(r"_kt_bucket=(\d+)", plan))
-    assert len(dirs) <= 2, plan
-    # fields projection and missing keys
-    got2 = get_keyed(spark, path, [3, 999], fields=["v"])
-    assert sorted(map(tuple, got2.collect())) == [(3, 30)]
+        dirs = set(re.findall(r"_kt_bucket=(\d+)", plan))
+        assert len(dirs) <= 2, plan
+        # fields projection and missing keys
+        got2 = get_keyed(spark, path, [3, 999], fields=["v"])
+        assert sorted(map(tuple, got2.collect())) == [(3, 30)]
+    finally:
+        spark.conf.set(conf, prev)
+    # the cached path: same rows, and warm gets run no job
+    get_keyed(spark, path, [3, 37]).collect()
+    rows: list = []
+    assert _jobs_run(
+        spark, lambda: rows.extend(get_keyed(spark, path, [3, 37]).collect())
+    ) == 0
+    assert sorted(map(tuple, rows)) == [(3, 30), (37, 370)]
+    rows.clear()
+    assert _jobs_run(
+        spark,
+        lambda: rows.extend(get_keyed(spark, path, [3, 999], fields=["v"]).collect()),
+    ) == 0
+    assert sorted(map(tuple, rows)) == [(3, 30)]
 
 
 def test_merge_keyed_mixed_batch_is_one_commit(spark, tmp_path):
@@ -2794,8 +2816,11 @@ def test_commits_write_one_file_per_touched_bucket(spark, tmp_path, plane):
 
 def test_merge_plan_has_one_exchange(spark, tmp_path, plane):
     """The last-write-wins window and the write share one hash
-    shuffle on the bucket id: the written plan of an APPEND holds
-    exactly one Exchange and no range partitioning."""
+    shuffle on the bucket id: the written plan of an APPEND, of a
+    MERGE with deletes and of a delete each holds exactly one Exchange
+    and no range partitioning."""
+    import pyspark.sql.functions as F
+
     from cascading_hbase_spark.keyed import table as kt
 
     path = str(tmp_path / "kt")
@@ -2821,13 +2846,27 @@ def test_merge_plan_has_one_exchange(spark, tmp_path, plane):
             ),
             path, "k", seq_col="g",
         )
+        # one update, two deletes (one of a key the batch re-inserts)
+        kt.merge_keyed(
+            spark, path,
+            spark.createDataFrame(
+                [(200, 9, -2.0, "update"), (300, 0, 0.0, "delete"),
+                 (400, 0, 0.0, "delete"), (400, 9, -4.0, "insert")],
+                "k long, g int, v double, _change string",
+            ),
+            seq_col="g",
+        )
+        delete_keyed(spark, path, spark.range(500, 503).select(F.col("id").alias("k")))
     finally:
         kt._bucket_sorted = real
-    assert len(plans) == 1
-    assert plans[0].count("Exchange") == 1, plans[0]
-    assert "rangepartitioning" not in plans[0]
+    assert len(plans) == 3
+    for plan in plans:
+        assert plan.count("Exchange") == 1, plan
+        assert "rangepartitioning" not in plan
     rows = {r["k"]: r["v"] for r in read_keyed(spark, path).collect()}
-    assert len(rows) == 2000 and rows[102] == -1.0 and rows[99] == 99.0
+    assert len(rows) == 2000 - 1 - 3 and rows[102] == -1.0 and rows[99] == 99.0
+    assert rows[200] == -2.0 and rows[400] == -4.0
+    assert 300 not in rows and not {500, 501, 502} & set(rows)
 
 
 def test_hot_key_append_job_budget(spark, tmp_path, plane):
@@ -2982,3 +3021,260 @@ def test_commit_reads_savepoint_registry_once(spark, tmp_path):
     ) == 1
     assert registry_reads(lambda: kt.set_ttl(path, "v", None)) == 1
     assert registry_reads(lambda: kt.compact_keyed(spark, path)) == 1
+
+
+# ---------------------------------------------------------------------------
+# Gets served from committed bucket generations held in the driver
+# ---------------------------------------------------------------------------
+
+def _job_descriptions(spark, action) -> list[str]:
+    """The job descriptions of the Spark jobs ``action()`` launches
+    (empty string for a job without one), through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"kt-desc-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)  # keeps the description
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for j in sc.statusTracker().getJobIdsForGroup(group):
+        d = store.job(j).description()
+        out.append(d.get() if d.isDefined() else "")
+    return out
+
+
+def _held_table(spark, path, **kw) -> dict[int, int]:
+    """A 100-row, 4-bucket table ``k -> 10k``; returns its rows."""
+    rows = {i: i * 10 for i in range(100)}
+    write_keyed(
+        spark.createDataFrame(list(rows.items()), "k long, v long"),
+        path, "k", n_buckets=4, **kw,
+    )
+    return rows
+
+
+def _get(spark, path, keys, **kw) -> dict:
+    from cascading_hbase_spark.keyed.table import get_keyed
+
+    return {r["k"]: r["v"] for r in get_keyed(spark, path, keys, **kw).collect()}
+
+
+def test_warm_get_runs_no_job(spark, tmp_path):
+    """The first get loads the table in one labelled fill job and
+    restores the caller's job description; later gets, of any buckets,
+    run no Spark job and return the same rows."""
+    from cascading_hbase_spark.keyed import table as kt
+
+    path = str(tmp_path / "kt")
+    _held_table(spark, path)
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        got: list = []
+        descs = _job_descriptions(
+            spark, lambda: got.append(_get(spark, path, [3, 97]))
+        )
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert descs == [f"keyed.get fill {path} v{kt.table_version(path)}"]
+    assert got == [{3: 30, 97: 970}]
+    assert _jobs_run(spark, lambda: got.append(_get(spark, path, [3, 97]))) == 0
+    assert _jobs_run(spark, lambda: got.append(_get(spark, path, [40, 60]))) == 0
+    assert got[1:] == [{3: 30, 97: 970}, {40: 400, 60: 600}]
+
+
+def test_append_reloads_only_its_bucket(spark, tmp_path, plane, monkeypatch):
+    """After an APPEND into one bucket, the next get of that bucket runs
+    one job that reads only that bucket and returns the new row; gets
+    of untouched buckets stay job-free."""
+    from cascading_hbase_spark.keyed import table as kt
+
+    path = str(tmp_path / "kt")
+    _held_table(spark, path)
+    _get(spark, path, [0])
+    write_keyed(spark.createDataFrame([(50, -1)], "k long, v long"), path, "k")
+    b = kt._bucket_of(50, kt._load_meta(path)["boundaries"])
+    reads = []
+    real = kt._read_raw
+
+    def recording(*a, **kw):
+        reads.append(kw.get("buckets"))
+        return real(*a, **kw)
+
+    monkeypatch.setattr(kt, "_read_raw", recording)
+    got: list = []
+    assert _jobs_run(spark, lambda: got.append(_get(spark, path, [50, 51]))) == 1
+    assert reads == [{b}]
+    assert got == [{50: -1, 51: 510}]
+    assert _jobs_run(spark, lambda: got.append(_get(spark, path, [0, 99]))) == 0
+    assert got[1] == {0: 0, 99: 990}
+
+
+def test_replace_never_serves_old_rows(spark, tmp_path, plane):
+    """REPLACE at the same path reuses the bucket and generation
+    numbers; a get after it returns only the new table's rows."""
+    from cascading_hbase_spark.keyed import table as kt
+
+    path = str(tmp_path / "kt")
+    _held_table(spark, path)
+    before = kt._load_meta(path)["gens"]
+    assert _get(spark, path, [1, 2]) == {1: 10, 2: 20}
+    write_keyed(
+        spark.createDataFrame([(i, -i) for i in range(2, 100)], "k long, v long"),
+        path, "k", mode=SinkMode.REPLACE, n_buckets=4,
+    )
+    assert kt._load_meta(path)["gens"] == before
+    assert _get(spark, path, [1, 2]) == {2: -2}
+
+
+def test_held_bucket_reads_evolved_column_as_typed_null(spark, tmp_path):
+    """A bucket held before an additive schema evolution returns the
+    new column, typed, as null."""
+    from pyspark.sql.types import StringType
+
+    from cascading_hbase_spark.keyed import table as kt
+    from cascading_hbase_spark.keyed.table import get_keyed
+
+    path = str(tmp_path / "kt")
+    _held_table(spark, path)
+    assert _get(spark, path, [1, 99]) == {1: 10, 99: 990}
+    write_keyed(
+        spark.createDataFrame([(99, 0, "x")], "k long, v long, extra string"),
+        path, "k",
+    )
+    meta = kt._load_meta(path)
+    assert kt._bucket_of(1, meta["boundaries"]) != kt._bucket_of(99, meta["boundaries"])
+    df = get_keyed(spark, path, [1, 99])
+    assert df.columns == ["k", "v", "extra"]
+    assert isinstance(df.schema["extra"].dataType, StringType)
+    assert sorted(map(tuple, df.collect())) == [(1, 10, None), (99, 0, "x")]
+
+
+def test_held_rows_expire_per_call(spark, tmp_path, monkeypatch):
+    """After ``set_ttl``, each get cuts expiry at its own clock, also
+    from rows held since before the TTL was set."""
+    import time
+
+    from cascading_hbase_spark.keyed import table as kt
+
+    path = str(tmp_path / "kt")
+    write_keyed(
+        spark.createDataFrame([(1, 1000.0), (2, 2000.0)], "k long, v double"),
+        path, "k", n_buckets=2,
+    )
+    assert _get(spark, path, [1, 2]) == {1: 1000.0, 2: 2000.0}
+    kt.set_ttl(path, "v", 500.0)
+    monkeypatch.setattr(time, "time", lambda: 1200.0)
+    assert _get(spark, path, [1, 2]) == {1: 1000.0, 2: 2000.0}
+    monkeypatch.setattr(time, "time", lambda: 1700.0)
+    got: list = []
+    assert _jobs_run(spark, lambda: got.append(_get(spark, path, [1, 2]))) == 0
+    assert got == [{2: 2000.0}]
+
+
+def test_time_travel_get_after_commits_and_rollback(spark, tmp_path):
+    """``get_keyed(generation=N)`` returns snapshot N after later
+    commits, and after ``rollback_keyed`` to N the current get does."""
+    from cascading_hbase_spark.keyed import table as kt
+
+    path = str(tmp_path / "kt")
+    _held_table(spark, path, retain=10)
+    keys = [0, 30, 60, 99]
+    v1 = {k: k * 10 for k in keys}
+    assert _get(spark, path, keys) == v1
+    write_keyed(spark.createDataFrame([(0, -1), (99, -1)], "k long, v long"), path, "k")
+    delete_keyed(spark, path, spark.createDataFrame([(30,)], "k long"))
+    assert _get(spark, path, keys) == {0: -1, 60: 600, 99: -1}
+    assert _get(spark, path, keys, generation=1) == v1
+    assert _get(spark, path, keys, generation=2) == {0: -1, 30: 300, 60: 600, 99: -1}
+    kt.rollback_keyed(path, 1)
+    assert _get(spark, path, keys) == v1
+
+
+def test_get_in_aborted_multi_commit_is_not_held(spark, tmp_path, plane):
+    """A get inside a ``multi_commit`` sees the staged rows, but they
+    are never held: the abort lets the next commit reuse the staged
+    generation number, and a get after that commit sees its rows."""
+    from cascading_hbase_spark.keyed import table as kt
+    from cascading_hbase_spark.keyed.txn import multi_commit
+
+    path = str(tmp_path / "kt")
+    _held_table(spark, path)
+    assert _get(spark, path, [5, 6]) == {5: 50, 6: 60}
+    staged_gens = None
+    with pytest.raises(RuntimeError, match="abort"):
+        with multi_commit([path]):
+            write_keyed(spark.createDataFrame([(5, -5)], "k long, v long"), path, "k")
+            staged_gens = kt._load_meta(path)["gens"]
+            assert _get(spark, path, [5, 6]) == {5: -5, 6: 60}
+            raise RuntimeError("abort")
+    assert _get(spark, path, [60]) == {60: 600}  # held, untouched bucket
+    write_keyed(spark.createDataFrame([(6, -6)], "k long, v long"), path, "k")
+    assert kt._load_meta(path)["gens"] == staged_gens
+    assert _get(spark, path, [5, 6]) == {5: 50, 6: -6}
+
+
+def test_restarted_session_drops_held_generations(spark, tmp_path, monkeypatch):
+    """Held generations belong to one Spark application: under a new
+    application id the get reloads, and the old entries are gone."""
+    from pyspark import SparkContext
+
+    from cascading_hbase_spark.keyed import table as kt
+
+    path = str(tmp_path / "kt")
+    _held_table(spark, path)
+    assert _get(spark, path, [7]) == {7: 70}
+    old = spark.sparkContext.applicationId
+    monkeypatch.setattr(SparkContext, "applicationId", property(lambda self: "restarted"))
+    got: list = []
+    assert _jobs_run(spark, lambda: got.append(_get(spark, path, [7]))) == 1
+    assert got == [{7: 70}]
+    with kt._HELD_LOCK:
+        apps = {k[0] for k in kt._HELD}
+    assert old not in apps and "restarted" in apps
+
+
+def test_table_over_bound_reads_pruned_parquet(spark, tmp_path):
+    """A table whose size estimate exceeds ``autoBroadcastJoinThreshold``
+    is not held: each get reads only its buckets' parquet files."""
+    import re
+
+    from cascading_hbase_spark.keyed import table as kt
+    from cascading_hbase_spark.keyed.table import get_keyed
+
+    path = str(tmp_path / "kt")
+    _held_table(spark, path)
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "1000")
+    try:
+        for _ in range(2):
+            got = get_keyed(spark, path, [3, 4])
+            files = got.inputFiles()
+            assert len({re.search(r"_kt_bucket=(\d+)", f)[1] for f in files}) == 1, files
+            rows: list = []
+            assert _jobs_run(spark, lambda: rows.extend(got.collect())) == 1
+            assert sorted(map(tuple, rows)) == [(3, 30), (4, 40)]
+    finally:
+        spark.conf.set(conf, prev)
+    with kt._HELD_LOCK:
+        assert not any(k[1] == path for k in kt._HELD)
+
+
+def test_commits_leave_no_success_marker(spark, tmp_path, plane):
+    """Create, APPEND, delete and compaction write no ``_SUCCESS``
+    marker (nor its checksum) at the table root."""
+    from cascading_hbase_spark.keyed.table import compact_keyed
+
+    path = str(tmp_path / "kt")
+    _held_table(spark, path)
+    write_keyed(spark.createDataFrame([(5, -5)], "k long, v long"), path, "k")
+    delete_keyed(spark, path, spark.createDataFrame([(6,)], "k long"))
+    compact_keyed(spark, path)
+    assert not {"_SUCCESS", "._SUCCESS.crc"} & set(os.listdir(path))
