@@ -1011,10 +1011,16 @@ def _merge(
         # over (bucket, key): a tombstone outranks the stored row and
         # loses to an upsert of the same batch (delete-then-insert), so
         # deletes ride the window's one shuffle instead of a join.  A
-        # key the table's key type cannot hold matches no row.
-        tombs = deletes.select(
-            F.col(key).try_cast(merged.schema[key].dataType).alias(key), BUCKET_COL
-        ).where(F.col(key).isNotNull())
+        # key the table's key type cannot hold exactly (3.5 on a bigint
+        # key, say) matches no row: its cast must round-trip.
+        ktype, dtype = merged.schema[key].dataType, deletes.schema[key].dataType
+        exact = F.col(key)
+        if ktype != dtype:
+            exact = exact.try_cast(ktype)
+            exact = F.when(exact.cast(dtype) == F.col(key), exact)
+        tombs = deletes.select(exact.alias(key), BUCKET_COL).where(
+            F.col(key).isNotNull()
+        )
         merged = merged.withColumn(_RANK, F.lit(0)).unionByName(
             tombs.withColumn(_RANK, F.lit(1)), allowMissingColumns=True
         )
@@ -1301,14 +1307,33 @@ def read_keyed(
 # a new ``table_id``.  So gets may serve a generation's rows from the
 # driver.  One entry per generation, keyed by (application id, path,
 # table_id, manifest schema JSON, bucket, generation); its value is
-# (rows, schema, size estimate), the rows as ``_read_raw`` yields them
-# (a JVM ``java.util.List<Row>``: nothing crosses into Python) and their
-# JVM schema.  Least recently used first.
+# (rows, schema, row count, heap bytes), the rows as ``_read_raw`` yields
+# them (a JVM ``java.util.List<Row>``: nothing crosses into Python) and
+# their JVM schema.  Least recently used first.
 _HELD: collections.OrderedDict = collections.OrderedDict()
 _HELD_LOCK = threading.Lock()
-# path -> the (application id, table_id, version, bound) whose snapshot
-# was found larger than the bound: its gets skip the size estimate
-_OVER_BOUND: dict = {}
+# path -> (application id, table_id, version, listed bytes) of the last
+# snapshot refused: later gets of that version go straight to parquet
+_REFUSED: dict = {}
+# The bounds are measured (``tools/held_get_crossover.py``, 4 vCPUs, a
+# (k, v, g, seq) bigint table, median of 15 interleaved gets of 1-10
+# random keys):
+# - a held get turns every row of the buckets it hits into the local
+#   relation (~1.5 us a row) while a pruned parquet get costs 110-220 ms
+#   whatever the table's size.  With 4 buckets (most gets hit all of
+#   them) held won at 50 000 rows (138 vs 182 ms) and lost at 100 000
+#   (177 vs 154 ms); with 8 and 32 buckets the loss came at ~60 000 rows
+#   converted per get too.  So a snapshot of more rows is never held;
+#   the fill counts them.
+# - the rows' heap form, measured with Spark's ``SizeEstimator`` after the
+#   fill, is ~140 bytes a row there, 12x the parquet files.  All tables
+#   together hold at most 64 MB (1/16 of Spark's default 1 GB driver
+#   heap), one table at most a quarter of it, so four tables at that size
+#   never evict each other.  Files larger than a table's share are
+#   refused before any job: the decoded rows only outgrow them.
+_HOLD_ROWS = 50_000
+_HOLD_BYTES = 64 << 20
+_HOLD_TABLE_BYTES = _HOLD_BYTES // 4
 
 
 def _held_rows(
@@ -1321,9 +1346,9 @@ def _held_rows(
     when the snapshot is not held: the caller reads parquet.
 
     Never held: legacy layouts and manifests without ``table_id`` or
-    ``schema`` (nothing to key on), and every read inside a
-    ``multi_commit`` block, whose staged manifests point at generations
-    an abort lets the next commit reuse."""
+    ``schema`` (nothing to key on), snapshots over the bounds above, and
+    every read inside a ``multi_commit`` block, whose staged manifests
+    point at generations an abort lets the next commit reuse."""
     from cascading_hbase_spark.keyed.txn import _TxnControlPlane
 
     gens, table_id, schema = meta.get("gens"), meta.get("table_id"), meta.get("schema")
@@ -1331,12 +1356,10 @@ def _held_rows(
         return None
     snap = {int(b): g for b, g in gens.items()}
     hit = sorted(b for b in wanted if b in snap)
-    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    if not hit or limit < 0:
-        return None  # no wanted bucket holds rows, or holding is off (-1)
+    if not hit:
+        return None  # no wanted bucket holds rows
     app = spark.sparkContext.applicationId
     keys = {b: (app, path, table_id, schema, b, g) for b, g in snap.items()}
-    token = (app, table_id, meta.get("version"), limit)
     with _HELD_LOCK:
         if _HELD and next(iter(_HELD))[0] != app:
             _HELD.clear()  # a restarted session's (entries share one app)
@@ -1344,16 +1367,14 @@ def _held_rows(
         for b in hit:
             if b in held:
                 _HELD.move_to_end(keys[b])
-        over = _OVER_BOUND.get(path) == token
+        refused = _REFUSED.get(path)
     if any(b not in held for b in hit):
-        if over:
+        if refused is not None and refused[:2] != (app, table_id):
+            refused = None
+        if refused is not None and refused[2] == meta.get("version"):
             return None
-        loaded = _load_generations(spark, path, meta, keys, held, limit)
-        if loaded is None:  # the snapshot exceeds the bound: hold none of it
-            with _HELD_LOCK:
-                _OVER_BOUND[path] = token
-                for k in [k for k in _HELD if k[1] == path]:
-                    del _HELD[k]
+        loaded = _load_generations(spark, path, meta, keys, held, refused)
+        if loaded is None:
             return None
         held.update(loaded)
     rows = spark.sparkContext._jvm.java.util.ArrayList()
@@ -1363,31 +1384,53 @@ def _held_rows(
 
 
 def _load_generations(
-    spark: SparkSession, path: str, meta: dict, keys: dict, held: dict, limit: int
+    spark: SparkSession, path: str, meta: dict, keys: dict, held: dict,
+    refused: tuple | None,
 ) -> dict | None:
     """Load every bucket of the snapshot that ``held`` lacks in ONE
-    Spark job and hold it, unless the snapshot's size estimate (Spark's
-    own, from the listed files, no job) exceeds ``limit``: then load
-    nothing and return None.  Other tables' least recently used
-    generations make room; this path's generations the snapshot does
-    not point at are dropped."""
+    Spark job and hold it; other tables' least recently used
+    generations make room, and this path's generations the snapshot
+    does not point at are dropped.  A snapshot over ``_HOLD_ROWS`` rows
+    or ``_HOLD_TABLE_BYTES`` of heap is refused: nothing of it is held,
+    the refusal is remembered in ``_REFUSED``, and None is returned.
+    Files already over the byte share, or not a quarter smaller than at
+    the last refused try, are refused from the listing alone, with no
+    job."""
     missing = sorted(set(keys) - set(held))
-    fill = _read_raw(spark, path, meta, buckets=set(missing))
-    fill = fill.coalesce(1).sortWithinPartitions(BUCKET_COL)._jdf
-    # planned once: the collect below reuses this optimized plan
-    need = fill.queryExecution().optimizedPlan().stats().sizeInBytes()
-    if need + sum(e[2] for e in held.values()) > limit:
-        return None
+    raw = _read_raw(spark, path, meta, buckets=set(missing))
+    # the listed files' bytes, from the analyzed plan (no job)
+    listed = raw._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    room = _HOLD_ROWS - sum(e[2] for e in held.values())
+    room_bytes = _HOLD_TABLE_BYTES - sum(e[3] for e in held.values())
     sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(f"keyed.get fill {path} v{meta.get('version')}")
-    try:
-        rows = fill.collectAsList()
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
-    schema = fill.schema()
-    col, n, jvm = schema.fieldIndex(BUCKET_COL), rows.size(), sc._jvm
-    loaded = {b: (jvm.java.util.ArrayList(), schema, 0) for b in missing}
+    rows = None
+    # a refused table is tried again once its files shrink by a quarter
+    # from the last try, not whenever an update moves a few bytes
+    tried = listed <= room_bytes and (refused is None or listed * 4 <= refused[3] * 3)
+    if tried:
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"keyed.get fill {path} v{meta.get('version')}")
+        try:
+            # one row past the room tells an over-bound snapshot apart
+            # without collecting all of it
+            fill = raw.coalesce(1).sortWithinPartitions(BUCKET_COL)
+            rows = fill.limit(room + 1)._jdf.collectAsList()
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
+        n = rows.size()
+        heap = sc._jvm.org.apache.spark.util.SizeEstimator.estimate(rows) if n <= room else 0
+        if n > room or heap > room_bytes:
+            rows = None
+    if rows is None:
+        with _HELD_LOCK:
+            ref = listed if tried or refused is None else refused[3]
+            _REFUSED[path] = (sc.applicationId, meta["table_id"], meta.get("version"), ref)
+            for k in [k for k in _HELD if k[1] == path]:
+                del _HELD[k]
+        return None
+    schema = raw._jdf.schema()
+    col, jvm = schema.fieldIndex(BUCKET_COL), sc._jvm
+    loaded = {b: (jvm.java.util.ArrayList(), schema, 0, 0) for b in missing}
     lo = 0
     while lo < n:  # rows sorted by bucket: binary-search where each run ends
         b = rows.get(lo).getInt(col)
@@ -1398,18 +1441,20 @@ def _load_generations(
                 h = m
             else:
                 end = m + 1
+        # copies the run's references only; the rows are shared
         part = jvm.java.util.ArrayList(rows.subList(lo, end))
-        loaded[b] = (part, schema, need * (end - lo) // n)
+        loaded[b] = (part, schema, end - lo, heap * (end - lo) // n)
         lo = end
     mine = set(keys.values())
     with _HELD_LOCK:
+        _REFUSED.pop(path, None)
         for k in [k for k in _HELD if k[1] == path and k not in mine]:
             del _HELD[k]
-        total = sum(e[2] for e in _HELD.values())
+        total = sum(e[3] for e in _HELD.values())
         for k in [k for k in _HELD if k not in mine]:
-            if total + need <= limit:
+            if total + heap <= _HOLD_BYTES:
                 break
-            total -= _HELD.pop(k)[2]
+            total -= _HELD.pop(k)[3]
         for b, e in loaded.items():
             _HELD[keys[b]] = e
     return loaded
@@ -1433,11 +1478,10 @@ def get_keyed(
     so later gets serve those buckets' rows as a local relation and
     collecting the result runs no Spark job, as an HBase Get is served
     from immutable store files through the block cache.  A commit
-    reloads only the buckets it rewrote.  "Small" is Spark's own
-    broadcast rule: the snapshot's size estimate, together with every
-    other table held, must stay within
-    ``spark.sql.autoBroadcastJoinThreshold`` (least recently used
-    generations make room; ``-1`` holds nothing).
+    reloads only the buckets it rewrote.  "Small" is measured: at most
+    50 000 rows, past which a held get's per-row cost loses to a pruned
+    parquet read, and at most 16 MB of driver heap, with 64 MB across
+    all tables held (least recently used generations make room).
 
     A larger table, and every get inside a ``multi_commit`` block, reads
     parquet with maximal pruning: ONLY the wanted buckets' live

@@ -358,6 +358,20 @@ def test_delete_can_empty_a_bucket(spark, tmp_path):
     assert keys == ["a"]
 
 
+def test_delete_key_of_wider_type_matches_exactly(spark, tmp_path):
+    """A delete key the table's key type cannot hold exactly deletes
+    nothing (3.5 never deletes the bigint key 3); one it holds exactly
+    (4.0) deletes its key."""
+    path = str(tmp_path / "kt")
+    write_keyed(
+        spark.createDataFrame([(i, i * 10) for i in range(8)], "k bigint, v bigint"),
+        path, "k", n_buckets=2,
+    )
+    delete_keyed(spark, path, spark.createDataFrame([(3.5,), (4.0,)], "k double"))
+    keys = sorted(r["k"] for r in read_keyed(spark, path).collect())
+    assert keys == [0, 1, 2, 3, 5, 6, 7]
+
+
 # ---------------------------------------------------------------------------
 # Round-3 surface: commit history, grace for emptied buckets, writer
 # lock, compaction / re-bucketing, time travel / rollback.
@@ -958,13 +972,14 @@ def test_composite_key_prefix_range_scan(spark, tmp_path):
     ]
 
 
-def test_get_keyed_point_lookup_prunes_buckets(spark, tmp_path):
+def test_get_keyed_point_lookup_prunes_buckets(spark, tmp_path, monkeypatch):
     """HBase multi-Get analogue: only the requested keys' buckets are
     listed (driver-side pruning), the IN predicate pushes to the scan,
     and results match the full-scan filter.  With the driver-side
-    generation cache off (``autoBroadcastJoinThreshold=-1``) the get
-    reads parquet; with it on, the same gets return the same rows and
-    a warm one runs no Spark job."""
+    generation cache off (``_held_rows`` holds nothing) the get reads
+    parquet; with it on, the same gets return the same rows and a warm
+    one runs no Spark job."""
+    from cascading_hbase_spark.keyed import table as kt
     from cascading_hbase_spark.keyed.table import get_keyed
 
     path = str(tmp_path / "kt")
@@ -972,10 +987,8 @@ def test_get_keyed_point_lookup_prunes_buckets(spark, tmp_path):
         [(i, i * 10) for i in range(40)], "k bigint, v bigint"
     )
     write_keyed(df, path, "k", n_buckets=4)
-    conf = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(conf)
-    spark.conf.set(conf, "-1")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(kt, "_held_rows", lambda *a: None)
         got = get_keyed(spark, path, [3, 37])
         assert sorted(map(tuple, got.collect())) == [(3, 30), (37, 370)]
         # pruning: the plan's file scan must reference at most 2 bucket dirs
@@ -988,8 +1001,6 @@ def test_get_keyed_point_lookup_prunes_buckets(spark, tmp_path):
         # fields projection and missing keys
         got2 = get_keyed(spark, path, [3, 999], fields=["v"])
         assert sorted(map(tuple, got2.collect())) == [(3, 30)]
-    finally:
-        spark.conf.set(conf, prev)
     # the cached path: same rows, and warm gets run no job
     get_keyed(spark, path, [3, 37]).collect()
     rows: list = []
@@ -3240,9 +3251,12 @@ def test_restarted_session_drops_held_generations(spark, tmp_path, monkeypatch):
     assert old not in apps and "restarted" in apps
 
 
-def test_table_over_bound_reads_pruned_parquet(spark, tmp_path):
-    """A table whose size estimate exceeds ``autoBroadcastJoinThreshold``
-    is not held: each get reads only its buckets' parquet files."""
+def test_table_over_row_bound_reads_pruned_parquet(spark, tmp_path, monkeypatch):
+    """A snapshot of more rows than ``_HOLD_ROWS`` is refused by its one
+    fill job and not held: each get reads only its buckets' parquet
+    files, and later gets of that version try no fill.  An update that
+    keeps the files' size tries no fill either; a delete that shrinks
+    them by more than a quarter is tried again and held."""
     import re
 
     from cascading_hbase_spark.keyed import table as kt
@@ -3250,21 +3264,77 @@ def test_table_over_bound_reads_pruned_parquet(spark, tmp_path):
 
     path = str(tmp_path / "kt")
     _held_table(spark, path)
-    conf = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(conf)
-    spark.conf.set(conf, "1000")
-    try:
-        for _ in range(2):
-            got = get_keyed(spark, path, [3, 4])
-            files = got.inputFiles()
-            assert len({re.search(r"_kt_bucket=(\d+)", f)[1] for f in files}) == 1, files
-            rows: list = []
-            assert _jobs_run(spark, lambda: rows.extend(got.collect())) == 1
-            assert sorted(map(tuple, rows)) == [(3, 30), (4, 40)]
-    finally:
-        spark.conf.set(conf, prev)
+    monkeypatch.setattr(kt, "_HOLD_ROWS", 50)
+    for fills in (1, 0):
+        got: list = []
+        descs = _job_descriptions(
+            spark, lambda: got.append(get_keyed(spark, path, [3, 4]))
+        )
+        assert len(descs) == fills and all("keyed.get fill" in d for d in descs)
+        files = got[0].inputFiles()
+        assert len({re.search(r"_kt_bucket=(\d+)", f)[1] for f in files}) == 1, files
+        rows: list = []
+        assert _jobs_run(spark, lambda: rows.extend(got[0].collect())) == 1
+        assert sorted(map(tuple, rows)) == [(3, 30), (4, 40)]
     with kt._HELD_LOCK:
         assert not any(k[1] == path for k in kt._HELD)
+    write_keyed(spark.createDataFrame([(3, -3)], "k long, v long"), path, "k")
+    descs = _job_descriptions(spark, lambda: _get(spark, path, [3]))
+    assert not any("keyed.get fill" in d for d in descs)
+    delete_keyed(spark, path, spark.createDataFrame([(i,) for i in range(60)], "k long"))
+    assert _get(spark, path, [3, 70]) == {70: 700}
+    assert _jobs_run(spark, lambda: _get(spark, path, [80, 99])) == 0
+
+
+def test_table_over_byte_share_is_refused_without_a_job(spark, tmp_path, monkeypatch):
+    """Files larger than a table's heap share are refused from the
+    listing alone: the get runs no fill job and reads parquet."""
+    from cascading_hbase_spark.keyed import table as kt
+    from cascading_hbase_spark.keyed.table import get_keyed
+
+    path = str(tmp_path / "kt")
+    _held_table(spark, path)
+    monkeypatch.setattr(kt, "_HOLD_TABLE_BYTES", 100)
+    got: list = []
+    assert _jobs_run(spark, lambda: got.append(get_keyed(spark, path, [3, 97]))) == 0
+    assert got[0].inputFiles()
+    assert sorted(map(tuple, got[0].collect())) == [(3, 30), (97, 970)]
+    with kt._HELD_LOCK:
+        assert not any(k[1] == path for k in kt._HELD)
+
+
+def test_held_heap_is_bounded(spark, tmp_path, monkeypatch):
+    """The rows' measured heap bounds what is held: a table whose rows
+    outgrow its share after the fill is refused, and holding one table
+    evicts other tables' least recently used generations while the
+    total would pass ``_HOLD_BYTES``."""
+    from cascading_hbase_spark.keyed import table as kt
+
+    paths = [str(tmp_path / n) for n in ("a", "b", "c")]
+    for p in paths:
+        _held_table(spark, p)
+    assert _get(spark, paths[0], [1]) == {1: 10}
+    with kt._HELD_LOCK:
+        heap = sum(e[3] for k, e in kt._HELD.items() if k[1] == paths[0])
+    meta = kt._load_meta(paths[1])
+    listed = kt._read_raw(spark, paths[1], meta)._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    assert 0 < listed < heap // 2
+    # the files fit the share but the rows, once measured, do not
+    monkeypatch.setattr(kt, "_HOLD_TABLE_BYTES", heap // 2)
+    assert _get(spark, paths[1], [2, 98]) == {2: 20, 98: 980}
+    with kt._HELD_LOCK:
+        assert not any(k[1] == paths[1] for k in kt._HELD)
+    # room for one and a half tables: holding c evicts a's least
+    # recently used generations, and a get of them reloads them
+    monkeypatch.setattr(kt, "_HOLD_TABLE_BYTES", 2 * heap)
+    monkeypatch.setattr(kt, "_HOLD_BYTES", heap * 3 // 2)
+    assert _get(spark, paths[2], [5]) == {5: 50}
+    with kt._HELD_LOCK:
+        held = [k[1] for k in kt._HELD]
+        total = sum(e[3] for e in kt._HELD.values())
+    assert held.count(paths[2]) == 4 and held.count(paths[0]) < 4
+    assert total <= kt._HOLD_BYTES
+    assert _jobs_run(spark, lambda: _get(spark, paths[0], [1])) == 1
 
 
 def test_commits_leave_no_success_marker(spark, tmp_path, plane):
